@@ -26,12 +26,16 @@ from __future__ import annotations
 import json
 import os
 import time
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 COMMIT_FILE = "_KG_COMMIT.json"
-STAGE_VERSION = 1  # bump to invalidate all snapshots on semantic change
+# bump to invalidate all snapshots on semantic change
+# (2: the manifest carries the read-back schema, build_s and bytes)
+STAGE_VERSION = 2
 
 
 def _manifest_path(stage_dir: str | Path) -> Path:
@@ -128,6 +132,50 @@ def _key_str(v) -> str | None:
     return str(v)
 
 
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, array element and map value nullable."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def readback_schema(schema: StructType, partition_by: list[str] | None = None) -> StructType:
+    """The schema ``spark.read.parquet`` gives a stage written from ``schema``:
+    partition columns last (in ``partitionBy`` order), every field nullable.
+    Reading with it skips the footer-inference job a schemaless read runs."""
+    part = list(partition_by or ())
+    fields = [f for f in schema.fields if f.name not in part] + [schema[c] for c in part]
+    return _nullable(StructType(fields))
+
+
+def _read_stage(spark: SparkSession, stage_dir: str | Path, manifest: dict) -> DataFrame:
+    return spark.read.schema(StructType.fromJson(manifest["schema"])).parquet(str(stage_dir))
+
+
+def table_fingerprints(tables: dict[str, DataFrame | None]) -> dict[str, str]:
+    """Content fingerprint ``"<rows>:<xor of row hashes>"`` of each table, all
+    in one aggregation (one Spark job per query stage, not per table).
+
+    Order-insensitive: a bit_xor of per-row xxhash64 values. to_json first,
+    as map-typed columns are not hashable. An empty table gives ``"0:None"``
+    and a missing (None) one ``"none"``."""
+    present = {name: df for name, df in tables.items() if df is not None}
+    agg: dict[str, str] = {}
+    if present:
+        rows = reduce(DataFrame.unionAll, [
+            df.select(F.lit(name).alias("tag"),
+                      F.xxhash64(F.to_json(F.struct(*sorted(df.columns)))).alias("h"))
+            for name, df in present.items()
+        ])
+        agg = {r["tag"]: f"{r['n']}:{r['h']}" for r in rows.groupBy("tag").agg(
+            F.count(F.lit(1)).alias("n"), F.bit_xor("h").alias("h")).collect()}
+    return {name: "none" if df is None else agg.get(name, "0:None") for name, df in tables.items()}
+
+
 def write_stage(
     spark: SparkSession,
     df: DataFrame,
@@ -136,27 +184,39 @@ def write_stage(
     input_fingerprint: str,
     key_col: str | None = None,
     partition_by: list[str] | None = None,
+    started: float | None = None,
 ) -> DataFrame:
     """Write df → parquet dir, then commit the manifest (data before marker:
-    crash between the two leaves an uncommitted, invisible stage)."""
+    crash between the two leaves an uncommitted, invisible stage).
+
+    ``started`` is the ``time.perf_counter()`` at which the caller began
+    building ``df``; the manifest's ``build_s`` runs from it (or from this
+    call) to the end of the data write."""
+    t0 = time.perf_counter() if started is None else started
     stage_dir = Path(stage_dir)
+    schema = readback_schema(df.schema, partition_by)
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(str(stage_dir))
+    build_s = time.perf_counter() - t0
 
+    lineage = compute_lineage(spark, stage_dir, key_col)
     manifest = {
         "stage": stage,
         "version": STAGE_VERSION,
         "input_fingerprint": input_fingerprint,
         "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        "lineage": compute_lineage(spark, stage_dir, key_col),
+        "build_s": round(build_s, 4),
+        "row_count": sum(r["row_count"] for r in lineage),
+        "bytes": sum(r["byte_size"] for r in lineage),
+        "schema": schema.jsonValue(),
+        "lineage": lineage,
     }
-    manifest["row_count"] = sum(r["row_count"] for r in manifest["lineage"])
     tmp = _manifest_path(stage_dir).with_suffix(".tmp")
     tmp.write_text(json.dumps(manifest, indent=1))
     tmp.rename(_manifest_path(stage_dir))  # atomic commit point
-    return spark.read.parquet(str(stage_dir))
+    return _read_stage(spark, stage_dir, manifest)
 
 
 def run_stage(
@@ -181,9 +241,11 @@ def run_stage(
         and m.get("input_fingerprint") == input_fingerprint
         and (not verify_integrity or verify_stage_integrity(spark, stage_dir))
     ):
-        return spark.read.parquet(str(stage_dir)), True
+        return _read_stage(spark, stage_dir, m), True
+    started = time.perf_counter()
     df = build()
-    return write_stage(spark, df, stage_dir, stage, input_fingerprint, key_col, partition_by), False
+    return write_stage(spark, df, stage_dir, stage, input_fingerprint, key_col, partition_by,
+                       started), False
 
 
 def verify_stage_integrity(spark: SparkSession, stage_dir: str | Path) -> bool:

@@ -174,7 +174,7 @@ def run_kg_pipeline_checkpointed(
     from ..operators.linking import build_alias_table, resolve_mentions
     from ..operators.canonical import apply_canonical_remap, cluster_external_entities
     from ..operators.chunks import embed_texts_df
-    from .checkpoint import run_stage as _run_stage
+    from .checkpoint import run_stage as _run_stage, table_fingerprints
 
     def run_stage(*a, **kw):
         return _run_stage(*a, verify_integrity=verify_integrity, **kw)
@@ -182,31 +182,19 @@ def run_kg_pipeline_checkpointed(
     def fp(*parts: str) -> str:
         return hashlib.md5("\x00".join(parts).encode()).hexdigest()
 
-    from pyspark.sql import functions as _F
-
-    _dfp_cache: dict[int, str] = {}
-
-    def dfp(df: DataFrame | None) -> str:
-        """Content fingerprint of a dimension table (registry / doc_meta /
-        ground-truth edges): order-insensitive xor of per-row hashes + count.
-        Stages that consume these inputs fold this into their fingerprint so
-        changing the registry (etc.) invalidates exactly the stages that read
-        it — a path-only fingerprint silently resumes stale snapshots
-        (ADVICE round 1). to_json first: map-typed columns aren't hashable."""
-        if df is None:
-            return "none"
-        key = id(df)
-        if key not in _dfp_cache:
-            row = df.select(
-                _F.count(_F.lit(1)).alias("n"),
-                _F.bit_xor(_F.xxhash64(_F.to_json(_F.struct(*sorted(df.columns))))).alias("h"),
-            ).first()
-            _dfp_cache[key] = f"{row['n']}:{row['h']}"
-        return _dfp_cache[key]
+    # Content fingerprints of the dimension tables, one aggregation for all.
+    # Stages that consume these inputs fold them into their fingerprint so
+    # changing the registry (etc.) invalidates exactly the stages that read
+    # it — a path-only fingerprint silently resumes stale snapshots
+    # (ADVICE round 1).
+    dfp = table_fingerprints({
+        "registry": registry, "doc_meta": doc_meta, "employees": employees,
+        "assignments": assignments, "policies": policies, "emails": emails,
+    })
 
     out: dict[str, DataFrame] = {}
     resumed: dict[str, bool] = {}
-    f_docs = fp(corpus_fingerprint, "documents", dfp(doc_meta))
+    f_docs = fp(corpus_fingerprint, "documents", dfp["doc_meta"])
 
     out["documents"], resumed["documents"] = run_stage(
         spark, f"{base_dir}/documents", "documents", f_docs,
@@ -220,7 +208,7 @@ def run_kg_pipeline_checkpointed(
     )
 
     aliases = build_alias_table(registry)
-    f_res = fp(gaz_fp, "mentions", dfp(registry))
+    f_res = fp(gaz_fp, "mentions", dfp["registry"])
 
     def _build_resolved():
         m, ext = resolve_mentions(out["mentions_raw"], aliases)
@@ -261,7 +249,7 @@ def run_kg_pipeline_checkpointed(
     if shadows is not None:
         nodes = nodes.unionByName(shadows)
     nodes = nodes.unionByName(document_nodes(out["documents"]))
-    f_nodes = fp(f_res, "nodes", dfp(registry), dfp(doc_meta))
+    f_nodes = fp(f_res, "nodes", dfp["registry"], dfp["doc_meta"])
     out["nodes"], resumed["nodes"] = run_stage(
         spark, f"{base_dir}/nodes", "nodes", f_nodes, lambda: nodes, key_col="id",
     )
@@ -286,8 +274,8 @@ def run_kg_pipeline_checkpointed(
             edges = edges.unionByName(sent_edges(emails, employees))
         return edges
 
-    f_edges = fp(f_nodes, "edges", dfp(employees), dfp(assignments), dfp(policies),
-                 dfp(emails))
+    f_edges = fp(f_nodes, "edges", dfp["employees"], dfp["assignments"], dfp["policies"],
+                 dfp["emails"])
     out["edges"], resumed["edges"] = run_stage(
         spark, f"{base_dir}/edges", "edges", f_edges, _build_edges, key_col="src",
         partition_by=["predicate"],

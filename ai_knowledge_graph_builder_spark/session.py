@@ -13,6 +13,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: the Python worker daemon (see worker_daemon.py): stock pyspark.daemon plus
+#: a guard that stops every task re-reading pyspark.zip's directory
+PYTHON_DAEMON_MODULE = "ai_knowledge_graph_builder_spark.worker_daemon"
+
+
+def default_driver_memory() -> str:
+    """40% of the host's MemTotal, capped at 16g: a fixed 16g heap on a
+    15 GiB host without swap grows until the kernel OOM-kills the JVM."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024
+                    return f"{min(int(0.4 * total_mb), 16 * 1024)}m"
+    except OSError:
+        pass
+    return "16g"
+
 
 def get_spark(
     app_name: str = "kg-spark",
@@ -70,7 +88,8 @@ def get_spark(
             "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
             os.environ.get("SPARK_GRAFT_OBJ_AGG_FALLBACK", str(65_536)),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
+        .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # managed-table warehouse outside the repo (bucketed graph tables)

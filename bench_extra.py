@@ -9,7 +9,8 @@ Usage:
 Per query: noop-sink isolated timing (guide §1.4), min-of-N with the cache
 cleared between tries, steal fraction sampled around each try; with
 --explain-tag TAG also writes plans/r07/<query>_<TAG>.txt with the
-``.explain("formatted")`` output. Prints one JSON line.
+``.explain("formatted")`` output of the last timed DataFrame. Prints one
+JSON line.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from bench import HEADLINE, _spin_probe, _stop_accumulation_daemon, _time_query
+from bench import HEADLINE, _spin_probe, _stop_accumulation_daemon
 
 
 def main() -> None:
@@ -73,7 +74,10 @@ def main() -> None:
         for _ in range(tries):
             spark.catalog.clearCache()
             s0, t0 = _steal_snapshot()
-            sec = _time_query(spark, fn, sf_dir)
+            start = time.perf_counter()
+            df = fn(spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+            sec = time.perf_counter() - start
             s1, t1 = _steal_snapshot()
             worst_steal = max(worst_steal, (s1 - s0) / max(t1 - t0, 1))
             best = sec if best is None or sec < best else best
@@ -82,8 +86,10 @@ def main() -> None:
         if tag:
             plans_dir.mkdir(parents=True, exist_ok=True)
             buf = io.StringIO()
+            # the DataFrame that was timed: rebuilding it would re-run
+            # side-effecting queries (kg_stream_sessions)
             with contextlib.redirect_stdout(buf):
-                fn(spark, sf_dir).explain("formatted")
+                df.explain("formatted")
             (plans_dir / f"{name}_{tag}.txt").write_text(buf.getvalue())
         spark.sparkContext.setJobDescription(None)
 

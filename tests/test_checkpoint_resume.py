@@ -119,3 +119,90 @@ def test_integrity_check_detects_corruption(spark, tmp_path):
     df, resumed2 = run_stage(spark, d, "s", "fp", build, key_col="k", verify_integrity=True)
     assert not resumed2 and calls["n"] == 2 and df.count() == 1000
     assert verify_stage_integrity(spark, d)
+
+
+@pytest.fixture(scope="module")
+def committed(spark, corpus, tmp_path_factory):
+    """One full checkpointed build, shared by the manifest and resume tests."""
+    dfs = {k: spark.createDataFrame(corpus[k]) for k in
+           ["pages", "doc_meta", "registry", "employees", "assignments", "policies", "emails"]}
+    base = tmp_path_factory.mktemp("committed")
+    out, resumed = run_kg_pipeline_checkpointed(
+        spark, str(base), dfs["pages"], dfs["registry"], corpus_fingerprint="test-v1",
+        doc_meta=dfs["doc_meta"], employees=dfs["employees"], assignments=dfs["assignments"],
+        policies=dfs["policies"], emails=dfs["emails"],
+    )
+    assert not any(resumed.values())
+    return dfs, base, sorted(resumed)
+
+
+def test_manifest_schema_is_the_readback_schema(spark, committed):
+    """Each stage's stored schema equals what a schemaless read infers, so
+    reading with it changes nothing but the skipped inference job."""
+    from pyspark.sql.types import MapType, StructType
+
+    _, base, stages = committed
+    assert {"edges", "triples", "nodes"} <= set(stages)
+    map_cols = 0
+    for stage in stages:
+        stored = StructType.fromJson(read_manifest(base / stage)["schema"])
+        assert stored == spark.read.parquet(str(base / stage)).schema, stage
+        map_cols += sum(isinstance(f.dataType, MapType) for f in stored.fields)
+    assert map_cols >= 2  # the props columns of nodes and edges
+    for stage in ("edges", "triples"):  # partitionBy(predicate): read back last
+        fields = read_manifest(base / stage)["schema"]["fields"]
+        assert fields[-1]["name"] == "predicate"
+
+
+def test_manifest_records_build_time_and_bytes(committed):
+    _, base, stages = committed
+    for stage in stages:
+        m = read_manifest(base / stage)
+        assert m["bytes"] == sum(r["byte_size"] for r in m["lineage"]) > 0
+        assert m["build_s"] > 0
+
+
+def test_committed_resume_launches_at_most_two_jobs(spark, committed):
+    """Fingerprints take one aggregation; reads carry their schema and the
+    integrity check reads footers in Python, so no other job runs before
+    the caller's first action."""
+    import uuid
+
+    dfs, base, _ = committed
+    sc = spark.sparkContext
+    group = f"resume-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out, resumed = run_kg_pipeline_checkpointed(
+            spark, str(base), dfs["pages"], dfs["registry"], corpus_fingerprint="test-v1",
+            doc_meta=dfs["doc_meta"], employees=dfs["employees"], assignments=dfs["assignments"],
+            policies=dfs["policies"], emails=dfs["emails"], verify_integrity=True,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert all(resumed.values())
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert out["triples"].count() > 0
+
+
+def test_batched_fingerprints_equal_per_table_query(spark, corpus):
+    from pyspark.sql import functions as F
+
+    from ai_knowledge_graph_builder_spark.plans.checkpoint import table_fingerprints
+
+    def one(df):
+        row = df.select(
+            F.count(F.lit(1)).alias("n"),
+            F.bit_xor(F.xxhash64(F.to_json(F.struct(*sorted(df.columns))))).alias("h"),
+        ).first()
+        return f"{row['n']}:{row['h']}"
+
+    registry = spark.createDataFrame(corpus["registry"])
+    props = spark.createDataFrame([("a", {"k": "v"}), ("b", {})], "id string, props map<string,string>")
+    empty = registry.limit(0)
+    got = table_fingerprints({"registry": registry, "props": props, "empty": empty, "missing": None})
+    assert got == {"registry": one(registry), "props": one(props), "empty": one(empty),
+                   "missing": "none"}
+    assert got["empty"] == "0:None" and not got["registry"].startswith("0:")
