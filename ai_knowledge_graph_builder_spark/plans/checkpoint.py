@@ -184,15 +184,12 @@ def write_stage(
     input_fingerprint: str,
     key_col: str | None = None,
     partition_by: list[str] | None = None,
-    started: float | None = None,
 ) -> DataFrame:
     """Write df → parquet dir, then commit the manifest (data before marker:
-    crash between the two leaves an uncommitted, invisible stage).
-
-    ``started`` is the ``time.perf_counter()`` at which the caller began
-    building ``df``; the manifest's ``build_s`` runs from it (or from this
-    call) to the end of the data write."""
-    t0 = time.perf_counter() if started is None else started
+    crash between the two leaves an uncommitted, invisible stage). The
+    manifest's ``build_s`` is the data write's wall time, which is when
+    ``df``'s plan runs."""
+    t0 = time.perf_counter()
     stage_dir = Path(stage_dir)
     schema = readback_schema(df.schema, partition_by)
     writer = df.write.mode("overwrite")
@@ -242,10 +239,8 @@ def run_stage(
         and (not verify_integrity or verify_stage_integrity(spark, stage_dir))
     ):
         return _read_stage(spark, stage_dir, m), True
-    started = time.perf_counter()
     df = build()
-    return write_stage(spark, df, stage_dir, stage, input_fingerprint, key_col, partition_by,
-                       started), False
+    return write_stage(spark, df, stage_dir, stage, input_fingerprint, key_col, partition_by), False
 
 
 def verify_stage_integrity(spark: SparkSession, stage_dir: str | Path) -> bool:

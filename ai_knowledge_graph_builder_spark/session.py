@@ -10,12 +10,32 @@ alias dictionary / rule table always broadcast.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 #: the Python worker daemon (see worker_daemon.py): stock pyspark.daemon plus
 #: a guard that stops every task re-reading pyspark.zip's directory
 PYTHON_DAEMON_MODULE = "ai_knowledge_graph_builder_spark.worker_daemon"
+#: the directory (or zip) this package is imported from
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def python_worker_conf(master: str) -> dict[str, str]:
+    """Start Python workers through the guarded daemon, on ``local[...]``
+    masters only. The daemon imports this package before it forks any
+    worker, but pyspark puts ``--py-files``/``addPyFile`` archives on
+    ``sys.path`` only inside a forked worker, at task start; executors of a
+    cluster master may not have the package before that, so they keep the
+    stock daemon. Local workers share the driver's file system, so the
+    package's root on their ``PYTHONPATH`` makes it importable whatever
+    their working directory."""
+    if not re.fullmatch(r"local(\[[^\]]*\])?", master):
+        return {}
+    return {
+        "spark.python.daemon.module": PYTHON_DAEMON_MODULE,
+        "spark.executorEnv.PYTHONPATH": PACKAGE_ROOT,
+    }
 
 
 def default_driver_memory() -> str:
@@ -89,7 +109,6 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_OBJ_AGG_FALLBACK", str(65_536)),
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
-        .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # managed-table warehouse outside the repo (bucketed graph tables)
@@ -101,7 +120,7 @@ def get_spark(
     # the scaling worker/probe JVMs pass their own flags via extra_conf and
     # must not silently discard the env-provided A/B flags; caller flags come
     # last so they win on a per-flag conflict (JVM last-one-wins).
-    conf = dict(extra_conf or {})
+    conf = {**python_worker_conf(master), **(extra_conf or {})}
     java_opts = os.environ.get("SPARK_GRAFT_JAVA_OPTS")
     if java_opts:
         caller_opts = conf.pop("spark.driver.extraJavaOptions", "")

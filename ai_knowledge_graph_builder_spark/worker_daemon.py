@@ -1,6 +1,7 @@
 """PySpark worker daemon that re-reads a zip archive only when it changed.
 
-Set as ``spark.python.daemon.module`` by ``session.get_spark``. Every Python
+Set as ``spark.python.daemon.module`` by ``session.get_spark`` on
+``local[...]`` masters (see ``session.python_worker_conf``). Every Python
 task starts with ``importlib.invalidate_caches()`` (pyspark
 ``worker_util.setup_spark_files``). On CPython 3.11 that makes each
 ``zipimporter`` re-read its archive's whole central directory. A worker

@@ -4,14 +4,22 @@ host-sized driver heap (session.py)."""
 from __future__ import annotations
 
 import importlib
+import os
+import subprocess
 import sys
+import textwrap
 import zipfile
 import zipimport
 
 import pytest
 
 from ai_knowledge_graph_builder_spark import worker_daemon
-from ai_knowledge_graph_builder_spark.session import PYTHON_DAEMON_MODULE, default_driver_memory
+from ai_knowledge_graph_builder_spark.session import (
+    PACKAGE_ROOT,
+    PYTHON_DAEMON_MODULE,
+    default_driver_memory,
+    python_worker_conf,
+)
 
 
 @pytest.fixture()
@@ -91,6 +99,49 @@ def test_python_workers_run_with_the_guard(spark):
 
     rows = spark.range(0, 8, 1, 4).mapInPandas(probe, "guard boolean").collect()
     assert len(rows) == 8 and all(r.guard for r in rows)
+
+
+@pytest.mark.parametrize("master", ["local", "local[3]", "local[*]", "local[4,2]"])
+def test_local_masters_use_the_guarded_daemon(master):
+    assert python_worker_conf(master) == {
+        "spark.python.daemon.module": PYTHON_DAEMON_MODULE,
+        "spark.executorEnv.PYTHONPATH": PACKAGE_ROOT,
+    }
+
+
+@pytest.mark.parametrize("master", ["spark://host:7077", "yarn", "k8s://https://host:443",
+                                    "local-cluster[2,1,1024]"])
+def test_cluster_masters_keep_the_stock_daemon(master):
+    # their executors may get the package only from --py-files, which a
+    # worker puts on sys.path after the daemon has forked it
+    assert python_worker_conf(master) == {}
+
+
+def test_workers_import_the_daemon_outside_the_repo(tmp_path):
+    """A local session started from another directory, with no PYTHONPATH,
+    still starts its workers through the daemon."""
+    script = tmp_path / "probe.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {PACKAGE_ROOT!r})
+        import pandas as pd
+        from ai_knowledge_graph_builder_spark.session import get_spark
+
+        def probe(it):
+            from ai_knowledge_graph_builder_spark.worker_daemon import zip_guard_installed
+            for pdf in it:
+                yield pd.DataFrame({{"guard": [zip_guard_installed()] * len(pdf)}})
+
+        spark = get_spark("daemon-cwd-probe", master="local[1]")
+        rows = spark.range(0, 4, 1, 2).mapInPandas(probe, "guard boolean").collect()
+        print("GUARD", all(r.guard for r in rows), len(rows))
+        spark.stop()
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "512m"
+    out = subprocess.run([sys.executable, str(script)], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=300)
+    assert "GUARD True 4" in out.stdout, out.stderr[-2000:]
 
 
 def test_default_driver_memory_is_sized_to_the_host():
