@@ -22,9 +22,18 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .cache import hold
 from .functions.chunking import chunk_text
 from .functions.html import render_html
-from .operators.graph import cooccurrence_pairs, infer_edges
+from .operators.graph import (
+    assemble_triples,
+    contradiction_edges,
+    cooccurrence_pairs,
+    ground_truth_edges,
+    infer_edges,
+    registry_nodes,
+    shadow_entities,
+)
 from .operators.linking import build_alias_table, resolve_mentions
 from .plans.pipeline import _empty_edges
 
@@ -209,23 +218,32 @@ def flagship_mentions_raw(
     )
 
 
+def flagship_mentions(
+    spark: SparkSession, sf_dir: str, gazetteer: list[tuple[str, str]] | None = None
+) -> DataFrame:
+    """documents → resolved mentions: ``flagship_mentions_raw`` linked
+    against the flagship registry. ``mentions_raw`` has one consumer (the
+    exact join inside resolve_mentions), so it is not persisted; the result
+    holds linking's caches (``cache.release``)."""
+    aliases = build_alias_table(flagship_registry_df(spark))
+    return resolve_mentions(flagship_mentions_raw(spark, sf_dir, gazetteer), aliases)[0]
+
+
 def kg_inferred_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full document→triples pipeline on the driver corpus; output is the
-    inferred SPO edge set with confidences."""
-    # single consumer (link_exact inside resolve_mentions) — no persist needed
-    mentions_raw = flagship_mentions_raw(spark, sf_dir)
-    registry = flagship_registry_df(spark)
-    aliases = build_alias_table(registry)
-    mentions, _ext_nodes = resolve_mentions(mentions_raw, aliases)
+    inferred SPO edge set with confidences. The result holds linking's
+    caches: ``cache.release(result)`` once it is materialized."""
+    mentions = flagship_mentions(spark, sf_dir)
     cooccur = cooccurrence_pairs(mentions)
     inferred = infer_edges(cooccur, _empty_edges(spark))
-    return inferred.select(
+    triples = inferred.select(
         F.col("src").alias("subject_id"),
         "predicate",
         F.col("dst").alias("object_id"),
         F.round("confidence", 4).alias("confidence"),
         F.col("props")["cooccurrence_count"].cast("long").alias("cooccurrence_count"),
     )
+    return hold(triples, mentions)
 
 
 # ---------------------------------------------------------------------------
@@ -318,11 +336,7 @@ def kg_external_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     ExternalEntity ids with first-doc attribution by (url, mention_idx)
     arrival order (entity_extractor.py:196-263, 283-308)."""
     gaz = flagship_gazetteer() + [(w, "ORG") for w in EXTERNAL_GAZ_WORDS]
-    mentions_raw = flagship_mentions_raw(spark, sf_dir, gaz)
-    registry = flagship_registry_df(spark)
-    aliases = build_alias_table(registry)
-    resolved, ext_nodes = resolve_mentions(mentions_raw, aliases)
-    ext = resolved.filter(F.col("resolution_type") == "external")
+    ext = flagship_mentions(spark, sf_dir, gaz).filter(F.col("resolution_type") == "external")
     return (
         ext.groupBy(F.col("resolved_id").alias("entity_id"))
         .agg(
@@ -368,7 +382,6 @@ def kg_orphan_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantees a non-vacuous Entity orphan row; Document orphans are the
     docs containing none of the registry words."""
     from .operators.edges_full import document_nodes, mention_edges
-    from .operators.graph import registry_nodes
     from .operators.graph_queries import orphan_nodes
 
     pages = load_pages(spark, sf_dir, salted=True)
@@ -480,10 +493,7 @@ WHERE predicate IS NOT NULL
 
 def kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 exact-linking shape: distinct (doc, entity) gazetteer resolutions."""
-    mentions_raw = flagship_mentions_raw(spark, sf_dir)
-    registry = flagship_registry_df(spark)
-    aliases = build_alias_table(registry)
-    mentions, _ = resolve_mentions(mentions_raw, aliases)
+    mentions = flagship_mentions(spark, sf_dir)
     return (
         mentions.filter(F.col("resolution_type") == "canonical")
         .select(
@@ -512,10 +522,7 @@ def kg_mention_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     first word-boundary match."""
     from .operators.edges_full import mention_edges
 
-    mentions_raw = flagship_mentions_raw(spark, sf_dir)
-    registry = flagship_registry_df(spark)
-    aliases = build_alias_table(registry)
-    mentions, _ = resolve_mentions(mentions_raw, aliases)
+    mentions = flagship_mentions(spark, sf_dir)
     edges = mention_edges(mentions)
     return edges.select(
         F.regexp_replace("src", "doc://", "").cast("long").alias("doc_id"),
@@ -599,7 +606,6 @@ def kg_metadata_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     id that must be dropped by the exists-gate — if the left_semi gate
     broke, the ghost rows would flip the driver's row-count and hash."""
     from .operators.edges_full import metadata_mention_edges
-    from .operators.graph import registry_nodes
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     did = F.col("doc_id")
@@ -637,14 +643,10 @@ def kg_triple_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ground-truth bucket). Each family's oracle SQL is reused as a CTE,
     so a count drifting in ANY family flips this query's hash too."""
     from .operators.edges_full import mention_edges, sent_edges
-    from .operators.graph import cooccurrence_pairs as _cooccur, infer_edges as _infer
 
-    mentions_raw = flagship_mentions_raw(spark, sf_dir)
-    registry = flagship_registry_df(spark)
-    aliases = build_alias_table(registry)
-    mentions, _ = resolve_mentions(mentions_raw, aliases)
+    mentions = flagship_mentions(spark, sf_dir)
     m_edges = mention_edges(mentions)
-    inferred = _infer(_cooccur(mentions), _empty_edges(spark))
+    inferred = infer_edges(cooccurrence_pairs(mentions), _empty_edges(spark))
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     did = F.col("doc_id")
@@ -693,14 +695,11 @@ def kg_one_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle coverage: the REAL one_hop_context operator over the flagship's
     inferred edge set, seeded with every registry entity, k=2 so the per-
     entity cap actually truncates (several subjects carry >2 edges)."""
-    from .operators.graph import cooccurrence_pairs as _cooccur, infer_edges as _infer, registry_nodes
     from .operators.graph_queries import one_hop_context
 
-    mentions_raw = flagship_mentions_raw(spark, sf_dir)
+    mentions = flagship_mentions(spark, sf_dir)
     registry = flagship_registry_df(spark)
-    aliases = build_alias_table(registry)
-    mentions, _ = resolve_mentions(mentions_raw, aliases)
-    inferred = _infer(_cooccur(mentions), _empty_edges(spark))
+    inferred = infer_edges(cooccurrence_pairs(mentions), _empty_edges(spark))
     nodes = registry_nodes(registry)
     ids = registry.select(F.col("entity_id").alias("id"))
     hop = one_hop_context(inferred, nodes, ids, k=2)
@@ -751,12 +750,8 @@ def _flagship_assembled_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inferred flagship edges through the REAL assemble_triples operator
     (J8 ×2 node join + P4 predicate exclusion + P5 natural text + D3 dedup)
     against the registry node dimension."""
-    from .operators.graph import assemble_triples, registry_nodes
-
-    mentions_raw = flagship_mentions_raw(spark, sf_dir)
+    mentions = flagship_mentions(spark, sf_dir)
     registry = flagship_registry_df(spark)
-    aliases = build_alias_table(registry)
-    mentions, _ = resolve_mentions(mentions_raw, aliases)
     inferred = infer_edges(cooccurrence_pairs(mentions), _empty_edges(spark))
     return assemble_triples(inferred, registry_nodes(registry))
 
@@ -881,8 +876,6 @@ def kg_flagged_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped by the exists-gate) and a product_mention contradiction on
     alternate docs (must be dropped by the type filter) — if either branch
     broke, the row count and hash flip."""
-    from .operators.graph import contradiction_edges, registry_nodes
-
     doc_meta = _flagship_contradiction_meta(spark, sf_dir)
     nodes = registry_nodes(flagship_registry_df(spark))
     edges = contradiction_edges(doc_meta, nodes)
@@ -917,13 +910,10 @@ def kg_source_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     contradiction land with used_in_triples = 0, and the extraction bucket
     lands with used_in_chunks = 0, so both outer branches are exercised."""
     from .operators.edges_full import mention_edges
-    from .operators.graph import contradiction_edges, registry_nodes
     from .operators.graph_queries import source_manifest
 
-    mentions_raw = flagship_mentions_raw(spark, sf_dir)
+    mentions = flagship_mentions(spark, sf_dir)
     registry = flagship_registry_df(spark)
-    aliases = build_alias_table(registry)
-    mentions, _ = resolve_mentions(mentions_raw, aliases)
     m_edges = mention_edges(mentions)
     c_edges = contradiction_edges(
         _flagship_contradiction_meta(spark, sf_dir), registry_nodes(registry)
@@ -2944,8 +2934,6 @@ def kg_ground_truth_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared arithmetic star-schema derivation so DuckDB recomputes every
     edge. props is emitted as canonical JSON so the map column itself is
     value-checked."""
-    from .operators.graph import ground_truth_edges
-
     employees, assignments, policies = _star_schema_entities(spark, sf_dir)
     edges = ground_truth_edges(employees, assignments, policies)
     return edges.select(
@@ -2990,8 +2978,6 @@ def kg_shadow_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash (functions/hashing.py stable_hash64 % 1e5), recomputed in DuckDB
     via ('0x' || substr(md5(name),1,16))::UBIGINT — bit-identical to
     F.conv(hex,16,10), so the content-derived id scheme itself is checked."""
-    from .operators.graph import shadow_entities
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     did = F.col("doc_id")
     pm = F.struct(
@@ -3061,8 +3047,6 @@ def kg_edge_exclusion_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold to one row, and (c) the same SPO under two distinct doc:// sources —
     legitimate parallel edges that must BOTH survive. A planted Document
     node exercises the node-prune path without changing the output."""
-    from .operators.graph import assemble_triples
-
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(F.col("o_orderkey") < 400)
     ok = F.col("o_orderkey")
     pred = (
@@ -3237,7 +3221,6 @@ def kg_graph_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .operators.graph import ground_truth_edges
     from .operators.graph_queries import export_graph_csv
 
     employees, assignments, policies = _star_schema_entities(spark, sf_dir)
@@ -3851,7 +3834,6 @@ def kg_golden_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference: generate_golden_queries.py categories, validate_rag.py
     :95-113 weights and :398-436 pass gate."""
-    from .operators.graph import ground_truth_edges
     from .plans.golden import _q, answer_golden_queries, score_golden_weighted
 
     employees, assignments, policies = _star_schema_entities(spark, sf_dir)

@@ -27,6 +27,7 @@ import re
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..cache import hold
 from .similarity import lsh_cosine_join
 
 
@@ -34,7 +35,8 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """(a, b) undirected edges → (id, rep) with rep = min id in component.
     Iterative min-label propagation; each round is one shuffle (groupBy min).
     Converges in O(diameter) rounds — entity-name clusters are tiny and
-    star-shaped, so 3-5 rounds in practice; max_iter bounds pathology."""
+    star-shaped, so 3-5 rounds in practice; max_iter bounds pathology. The
+    result holds the final label cache (``cache.release``)."""
     sym = edges.select(F.col("a").alias("x"), F.col("b").alias("y")).unionAll(
         edges.select(F.col("b").alias("x"), F.col("a").alias("y"))
     )
@@ -69,7 +71,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         if not changed:
             break
     sym.unpersist()
-    return labels.select("id", "rep")
+    return hold(labels.select("id", "rep"), labels)
 
 
 def cluster_external_entities(
@@ -111,7 +113,7 @@ def cluster_external_entities(
     # transitively (via a shared external neighbor), neither moves; only
     # external/shadow ids are ever remapped.
     remap = remap.join(typed, "id").filter(~is_canon).drop("node_type")
-    return remap.filter(F.col("id") != F.col("canonical_id"))
+    return hold(remap.filter(F.col("id") != F.col("canonical_id")), comp)
 
 
 def apply_canonical_remap(edges: DataFrame, remap: DataFrame) -> DataFrame:
@@ -126,7 +128,10 @@ def apply_canonical_remap(edges: DataFrame, remap: DataFrame) -> DataFrame:
         .withColumn("dst", F.coalesce("new_dst", "dst"))
         .drop("new_src", "new_dst")
     )
-    return out.dropDuplicates(["src", "predicate", "dst", "confidence", "source", "flagged", "inferred"])
+    return hold(
+        out.dropDuplicates(["src", "predicate", "dst", "confidence", "source", "flagged", "inferred"]),
+        remap,
+    )
 
 
 _PRONOUNS = ("he", "she", "they", "him", "her", "them", "his", "hers", "their")

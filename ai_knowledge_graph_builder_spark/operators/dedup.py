@@ -18,25 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def release(result: DataFrame) -> None:
-    """Unpersist the intermediate relations a dedup operator cached for its
-    own multi-consumption (ADVICE r5 #4: the persist would otherwise
-    accumulate in long-lived sessions with clearCache() pushed onto the
-    caller). Call once the result has been materialized:
-
-        pairs = minhash_dedup_pairs(df, "id", "text")
-        pairs.write.parquet(out)   # or .collect()/.count()
-        dedup.release(pairs)
-
-    The handle rides on the operator's DIRECT return value: further
-    transformations (``pairs.filter(...)``) produce new DataFrames without
-    it, so keep a reference to the original (release(original) still works
-    after deriving from it) — same contract as holding any explicit
-    resource handle.
-    """
-    for handle in getattr(result, "_kg_persisted", []):
-        handle.unpersist()
+from ..cache import hold, release  # noqa: F401  (dedup.release stays public)
 
 
 def exact_dedup_ids(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -96,7 +78,7 @@ def ngram_jaccard_pairs(
 
     Caching contract: the shingle relation is persisted because the
     returned lazy plan consumes it twice (candidate join + exact verify).
-    The persisted handle rides on the result as ``_kg_persisted`` — call
+    The persisted handle rides on the result (``cache.hold``) — call
     ``dedup.release(result)`` after materializing to unpersist
     deterministically (``spark.catalog.clearCache()`` also works; bench.py
     clears between tries)."""
@@ -109,8 +91,7 @@ def ngram_jaccard_pairs(
         .distinct()
     )
     out = jaccard_verify(cand, sh).filter(F.col("jaccard") >= tau)
-    out._kg_persisted = [sh]
-    return out
+    return hold(out, sh)
 
 
 def minhash_signatures(shingles: DataFrame, num_hashes: int = 16) -> DataFrame:
@@ -235,5 +216,4 @@ def minhash_dedup_pairs(
     )
     jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
     out = jm.select("a", "b", jac.alias("jaccard")).filter(F.col("jaccard") >= tau)
-    out._kg_persisted = [base]
-    return out
+    return hold(out, base)

@@ -250,11 +250,10 @@ def registry_nodes(registry: DataFrame) -> DataFrame:
     )
 
 
-def assemble_triples(edges: DataFrame, nodes: DataFrame, broadcast_nodes: bool = True) -> DataFrame:
+def assemble_triples(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     """J8 + P4 + P5 + D3: edge × node × node with the natural-text projection;
     deduplicated on (src, predicate, dst) — the north rule's deduplicated SPO
-    output. ``broadcast_nodes=False`` switches to a shuffle join for node
-    tables too large to broadcast (AQE handles skew)."""
+    output."""
     # dedup: the reference CREATEs one edge per contradiction document
     # (neo4j_loader.py:376-386), so (src, predicate, dst) alone is NOT the
     # identity — source/confidence/flags distinguish legitimate parallel
@@ -267,8 +266,8 @@ def assemble_triples(edges: DataFrame, nodes: DataFrame, broadcast_nodes: bool =
     # the node table is dominated by Document rows and would never broadcast,
     # while the entity-only side stays dimension-sized.
     n = nodes.filter(F.col("node_type") != "Document").select("id", "name", "node_type")
-    s = (F.broadcast(n) if broadcast_nodes else n).alias("s")
-    o = (F.broadcast(n) if broadcast_nodes else n).alias("o")
+    s = F.broadcast(n).alias("s")
+    o = F.broadcast(n).alias("o")
     j = (
         e.join(s, F.col("src") == F.col("s.id"))
         .join(o, F.col("dst") == F.col("o.id"))

@@ -35,6 +35,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..cache import hold
 from ..functions.fuzzy import best_alias_match
 from ..functions.hashing import external_entity_id
 
@@ -86,6 +87,11 @@ def link_exact(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
     return m.join(F.broadcast(a), "norm", "left")
 
 
+def collect_alias_rows(aliases: DataFrame) -> list[tuple[str, str, int]]:
+    """The alias table driver-side as [(alias, entity_id, insertion_idx)]."""
+    return [tuple(r) for r in aliases.select("alias", "entity_id", "insertion_idx").collect()]
+
+
 def score_fuzzy(distinct_texts: DataFrame, alias_rows: list[tuple[str, str, int]]) -> DataFrame:
     """J3 scoring: distinct unresolved texts → (norm, fuzzy_id, fuzzy_score).
     ``alias_rows`` is [(alias, entity_id, insertion_idx)] — sorted here by
@@ -131,7 +137,8 @@ def _ext_id_udf():
 #: open-vocabulary NER over web text, where distinct unresolved surface
 #: forms grow with the corpus and broadcasting that relation OOMs the
 #: driver at 100 TB. ~500k rows × ~100 B/row ≈ the session's 64 MB
-#: autoBroadcastJoinThreshold. Override with SPARK_GRAFT_NORM_BROADCAST_LIMIT.
+#: autoBroadcastJoinThreshold. Callers override it per call with
+#: ``resolve_mentions(broadcast_norm_limit=...)``.
 NORM_BROADCAST_LIMIT = 500_000
 
 
@@ -139,7 +146,7 @@ def resolve_mentions(
     mentions_raw: DataFrame,
     aliases: DataFrame,
     alias_rows: list[tuple[str, str, int]] | None = None,
-    broadcast_norm_limit: int | None = None,
+    broadcast_norm_limit: int = NORM_BROADCAST_LIMIT,
 ) -> tuple[DataFrame, DataFrame]:
     """Full J2→J3→A1 resolution. Returns (mentions_resolved, external_nodes).
 
@@ -149,18 +156,13 @@ def resolve_mentions(
 
     ``broadcast_norm_limit`` guards the join-back strategy for the
     distinct-norm side outputs (see NORM_BROADCAST_LIMIT); pass 0 to force
-    shuffle joins (used by tests and open-vocabulary corpora)."""
-    import os
+    shuffle joins (used by tests and open-vocabulary corpora).
 
-    if broadcast_norm_limit is None:
-        broadcast_norm_limit = int(
-            os.environ.get("SPARK_GRAFT_NORM_BROADCAST_LIMIT", NORM_BROADCAST_LIMIT)
-        )
+    The three relations cached along the way (the exact-join result, the
+    per-norm summary and the fuzzy scores) are held by the returned
+    mentions: ``cache.release(mentions)`` once they are materialized."""
     if alias_rows is None:
-        alias_rows = [
-            (r["alias"], r["entity_id"], r["insertion_idx"])
-            for r in aliases.select("alias", "entity_id", "insertion_idx").collect()
-        ]
+        alias_rows = collect_alias_rows(aliases)
 
     # Single-pass resolution: the exact-join result `m` is persisted once;
     # the fuzzy scores and external-entity table are BROADCAST-SIZED side
@@ -267,12 +269,19 @@ def resolve_mentions(
         )
     )
 
-    external_nodes = ext.select(
-        F.col("ext_id").alias("id"),
-        F.col("norm").alias("name"),
+    external_nodes = external_entity_nodes(
+        ext.select(F.col("ext_id").alias("id"), F.col("norm").alias("name"))
+    )
+    return hold(resolved, m, per_norm, scored), external_nodes
+
+
+def external_entity_nodes(ids: DataFrame) -> DataFrame:
+    """(id, name) → A1 ExternalEntity rows of the NODES table."""
+    return ids.select(
+        "id",
+        "name",
         F.lit("ExternalEntity").alias("node_type"),
         F.lit(EXTERNAL_CONFIDENCE).alias("confidence"),
         F.lit("phase7_extraction").alias("source"),
         F.create_map().cast("map<string,string>").alias("props"),
     )
-    return resolved, external_nodes

@@ -6,6 +6,13 @@ PERSON/ORG/PRODUCT/GPE/LAW (entity_extractor.py:154-194). Here: one
 installed) is constructed once per Python worker and reused across Arrow
 batches — the per-executor model-singleton pattern (SURVEY.md §7.4 risk 5).
 
+One kernel, ``_mention_frames``, runs the detector over ``(url, doc_type,
+text)`` rows and yields one MENTION_SCHEMA frame per Arrow batch. The three
+public entry points are source adapters around it that differ only in what
+crosses the JVM↔Python boundary: extracted text (``detect_mentions``), page
+html (``extract_and_detect``) or the pre-render corpus text
+(``synthesize_extract_and_detect``).
+
 Long pages are NOT chunked before NER here because the rule detector is
 O(len); a spaCy-backed detector would wrap itself with
 ``functions.chunking.chunk_text`` and offset-shift the spans (north rule
@@ -14,28 +21,63 @@ O(len); a spaCy-backed detector would wrap itself with
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+from collections.abc import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.html import extract_text, render_html
 from ..functions.ner import NER_LABELS, RuleNER
 
 MENTION_SCHEMA = (
     "url string, doc_type string, mention_idx int, text string, "
     "label string, start int, end int"
 )
+_MENTION_DTYPES = {
+    "url": "string", "doc_type": "string", "mention_idx": "int32", "text": "string",
+    "label": "string", "start": "int32", "end": "int32",
+}
 
-# per-worker detector cache: (id of gazetteer tuple) → detector
-_DETECTOR_CACHE: dict = {}
+
+@functools.cache  # one detector per Python worker and gazetteer tuple
+def _get_detector(gazetteer: tuple[tuple[str, str], ...] | None) -> RuleNER:
+    return RuleNER(list(gazetteer) if gazetteer else None)
 
 
-def _get_detector(gazetteer: tuple[tuple[str, str], ...] | None):
-    det = _DETECTOR_CACHE.get(gazetteer)
-    if det is None:
-        det = RuleNER(list(gazetteer) if gazetteer else None)
-        _DETECTOR_CACHE[gazetteer] = det
-    return det
+def _mention_frames(
+    batches: Iterable[Iterable[tuple[str, str | None, str]]],
+    gazetteer: tuple[tuple[str, str], ...] | None,
+) -> Iterator[pd.DataFrame]:
+    """The mention kernel: per batch of (url, doc_type, text) rows, one
+    MENTION_SCHEMA frame of the detector's spans with the NER label filter
+    (P2 — entity_extractor.py:176) applied. ``mention_idx`` indexes ALL of
+    a document's detector spans, before the label filter (plans/oracle.py)."""
+    detector = _get_detector(gazetteer)
+    for rows in batches:
+        found = [
+            (url, doc_type, mi, m.text, m.label, m.start, m.end)
+            for url, doc_type, text in rows
+            for mi, m in enumerate(detector(text))
+            if m.label in NER_LABELS
+        ]
+        yield pd.DataFrame(found, columns=list(_MENTION_DTYPES)).astype(_MENTION_DTYPES)
+
+
+def _page_rows(pages: Iterable[tuple[str, bytes]]) -> Iterator[tuple[str, None, str]]:
+    """(url, html) → kernel rows: extracted text, empty pages dropped (the
+    P1 word_count > 0 filter)."""
+    for url, html in pages:
+        text = extract_text(html)
+        if len(text.split()) > 0:
+            yield url, None, text
+
+
+def _salted(src: DataFrame, key: str, presalted: bool) -> DataFrame:
+    if presalted:
+        return src
+    n = 4 * src.sparkSession.sparkContext.defaultParallelism
+    return src.repartition(n, F.pmod(F.xxhash64(key), F.lit(n)))
 
 
 def detect_mentions(
@@ -48,34 +90,11 @@ def detect_mentions(
     gaz = tuple(gazetteer) if gazetteer else None
     src = documents.filter(F.col("word_count") > 0).select("url", "doc_type", "extracted_text")
 
-    def _detect(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        detector = _get_detector(gaz)
-        for pdf in batches:
-            urls, dts, idxs, texts, labels, starts, ends = [], [], [], [], [], [], []
-            for url, doc_type, text in zip(pdf["url"], pdf["doc_type"], pdf["extracted_text"]):
-                for mi, m in enumerate(detector(text)):
-                    if m.label not in NER_LABELS:
-                        continue
-                    urls.append(url)
-                    dts.append(doc_type)
-                    idxs.append(mi)
-                    texts.append(m.text)
-                    labels.append(m.label)
-                    starts.append(m.start)
-                    ends.append(m.end)
-            yield pd.DataFrame(
-                {
-                    "url": pd.array(urls, dtype="string"),
-                    "doc_type": pd.array(dts, dtype="string"),
-                    "mention_idx": pd.array(idxs, dtype="int32"),
-                    "text": pd.array(texts, dtype="string"),
-                    "label": pd.array(labels, dtype="string"),
-                    "start": pd.array(starts, dtype="int32"),
-                    "end": pd.array(ends, dtype="int32"),
-                }
-            )
+    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        rows = (zip(p["url"], p["doc_type"], p["extracted_text"]) for p in batches)
+        return _mention_frames(rows, gaz)
 
-    return src.mapInPandas(_detect, MENTION_SCHEMA)
+    return src.mapInPandas(_run, MENTION_SCHEMA)
 
 
 def extract_and_detect(
@@ -94,43 +113,11 @@ def extract_and_detect(
     the documents table must materialize (checkpointed stage runs); use this
     when mentions are the only consumer (streaming micro-batches, slice
     benchmarks, single-shot jobs)."""
-    from ..functions.html import extract_text
-
     gaz = tuple(gazetteer) if gazetteer else None
-    src = pages.select("url", "html")
-    if not presalted:
-        n = 4 * src.sparkSession.sparkContext.defaultParallelism
-        src = src.repartition(n, F.pmod(F.xxhash64("url"), F.lit(n)))
+    src = _salted(pages.select("url", "html"), "url", presalted)
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        detector = _get_detector(gaz)
-        for pdf in batches:
-            urls, dts, idxs, texts, labels, starts, ends = [], [], [], [], [], [], []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                text = extract_text(html)
-                if len(text.split()) <= 0:  # P1 wc>0 filter
-                    continue
-                for mi, m in enumerate(detector(text)):
-                    if m.label not in NER_LABELS:
-                        continue
-                    urls.append(url)
-                    dts.append(None)
-                    idxs.append(mi)
-                    texts.append(m.text)
-                    labels.append(m.label)
-                    starts.append(m.start)
-                    ends.append(m.end)
-            yield pd.DataFrame(
-                {
-                    "url": pd.array(urls, dtype="string"),
-                    "doc_type": pd.array(dts, dtype="string"),
-                    "mention_idx": pd.array(idxs, dtype="int32"),
-                    "text": pd.array(texts, dtype="string"),
-                    "label": pd.array(labels, dtype="string"),
-                    "start": pd.array(starts, dtype="int32"),
-                    "end": pd.array(ends, dtype="int32"),
-                }
-            )
+        return _mention_frames((_page_rows(zip(p["url"], p["html"])) for p in batches), gaz)
 
     return src.mapInPandas(_run, MENTION_SCHEMA)
 
@@ -153,44 +140,15 @@ def synthesize_extract_and_detect(
     worker pass and the only boundary traffic is (doc_id, text) in and the
     mention rows out. Use ``load_pages`` + ``extract_and_detect`` when the
     pages relation itself must materialize."""
-    from ..functions.html import extract_text, render_html
-
     gaz = tuple(gazetteer) if gazetteer else None
-    src = docs.select("doc_id", "text")
-    if not presalted:
-        n = 4 * src.sparkSession.sparkContext.defaultParallelism
-        src = src.repartition(n, F.pmod(F.xxhash64("doc_id"), F.lit(n)))
+    src = _salted(docs.select("doc_id", "text"), "doc_id", presalted)
+
+    def _pages(pdf: pd.DataFrame) -> Iterator[tuple[str, bytes]]:
+        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+            i = int(doc_id)
+            yield f"doc://{i:08d}", render_html(f"doc {i}", text)
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        detector = _get_detector(gaz)
-        for pdf in batches:
-            urls, dts, idxs, texts, labels, starts, ends = [], [], [], [], [], [], []
-            for doc_id, doc_text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                text = extract_text(render_html(f"doc {i}", doc_text))
-                if len(text.split()) <= 0:  # P1 wc>0 filter
-                    continue
-                url = f"doc://{i:08d}"
-                for mi, m in enumerate(detector(text)):
-                    if m.label not in NER_LABELS:
-                        continue
-                    urls.append(url)
-                    dts.append(None)
-                    idxs.append(mi)
-                    texts.append(m.text)
-                    labels.append(m.label)
-                    starts.append(m.start)
-                    ends.append(m.end)
-            yield pd.DataFrame(
-                {
-                    "url": pd.array(urls, dtype="string"),
-                    "doc_type": pd.array(dts, dtype="string"),
-                    "mention_idx": pd.array(idxs, dtype="int32"),
-                    "text": pd.array(texts, dtype="string"),
-                    "label": pd.array(labels, dtype="string"),
-                    "start": pd.array(starts, dtype="int32"),
-                    "end": pd.array(ends, dtype="int32"),
-                }
-            )
+        return _mention_frames((_page_rows(_pages(p)) for p in batches), gaz)
 
     return src.mapInPandas(_run, MENTION_SCHEMA)

@@ -32,6 +32,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
+from ..cache import release
+
 COMMIT_FILE = "_KG_COMMIT.json"
 # bump to invalidate all snapshots on semantic change
 # (2: the manifest carries the read-back schema, build_s and bytes)
@@ -229,7 +231,9 @@ def run_stage(
     """Resume-or-build. Returns (df, resumed). A stage is skipped iff its
     committed manifest matches (stage, version, input_fingerprint) — and,
     with ``verify_integrity``, iff its files still match the manifest's
-    footer stats (corruption → rebuild instead of trusting the snapshot)."""
+    footer stats (corruption → rebuild instead of trusting the snapshot).
+    A built stage releases the caches its result holds (``cache.hold``)
+    once written: later stages read the committed table."""
     m = read_manifest(stage_dir)
     if (
         m is not None
@@ -240,7 +244,9 @@ def run_stage(
     ):
         return _read_stage(spark, stage_dir, m), True
     df = build()
-    return write_stage(spark, df, stage_dir, stage, input_fingerprint, key_col, partition_by), False
+    committed = write_stage(spark, df, stage_dir, stage, input_fingerprint, key_col, partition_by)
+    release(df)  # the write consumed every cache the build's result holds
+    return committed, False
 
 
 def verify_stage_integrity(spark: SparkSession, stage_dir: str | Path) -> bool:

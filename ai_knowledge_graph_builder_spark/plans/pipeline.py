@@ -9,8 +9,13 @@ checkpointed table stages in plans/checkpoint.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import hashlib
 
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..cache import hold
+from ..operators.canonical import apply_canonical_remap, cluster_external_entities, resolve_pronouns
+from ..operators.chunks import chunk_documents, embed_chunks, embed_texts_df
 from ..operators.edges_full import (
     document_nodes,
     mention_edges,
@@ -28,8 +33,12 @@ from ..operators.graph import (
     registry_nodes,
     shadow_entities,
 )
-from ..operators.linking import build_alias_table, resolve_mentions
+from ..operators.linking import build_alias_table, external_entity_nodes, resolve_mentions
 from ..operators.mentions import detect_mentions
+from ..schemas import EDGES
+# looked up through the module at call time, so a wrapped ck.run_stage
+# (perfbench's traced pass) sees every stage
+from . import checkpoint as ck
 
 
 def run_kg_pipeline(
@@ -42,7 +51,6 @@ def run_kg_pipeline(
     policies: DataFrame | None = None,
     emails: DataFrame | None = None,
     gazetteer: list[tuple[str, str]] | None = None,
-    broadcast_nodes: bool = True,
     with_pronouns: bool = False,
 ) -> dict[str, DataFrame]:
     """Run the full flow lazily; returns the named DataFrames. Callers decide
@@ -52,7 +60,10 @@ def run_kg_pipeline(
     ``nodes``/``edges`` are the COMPLETE reference graph — Document nodes and
     MENTIONS / SENT / SENT_TO edges included (neo4j_loader.py steps 3-7 +
     entity_extractor.py step 3); ``triples`` excludes the non-semantic
-    predicates exactly as the reference does (entity_extractor.py:459)."""
+    predicates exactly as the reference does (entity_extractor.py:459).
+
+    Every cache the run creates is held by ``mentions``: call
+    ``cache.release(out["mentions"])`` once the outputs are materialized."""
     documents = extract_documents(pages, doc_meta)
     # persist the NER output: everything downstream (exact/fuzzy/external
     # linking, MENTIONS table, co-occurrence) fans out from here, and the
@@ -60,17 +71,41 @@ def run_kg_pipeline(
     mentions_raw = detect_mentions(documents, gazetteer).persist()
 
     aliases = build_alias_table(registry)
-    mentions, external_nodes = resolve_mentions(mentions_raw, aliases)
+    resolved, external_nodes = resolve_mentions(mentions_raw, aliases)
+    mentions = resolved
     if with_pronouns:
         # north-rule extension: pronoun-to-antecedent mentions. Canonical
         # pronoun resolutions point at entities already mentioned in the same
         # document, so per-doc distinct entity sets — and therefore
         # co-occurrence counts and the final triple set — are unchanged.
-        from ..operators.canonical import resolve_pronouns
-
         mentions = mentions.unionByName(resolve_pronouns(documents, mentions))
     mentions = mentions.persist()
+    hold(mentions, mentions, mentions_raw, resolved)
 
+    graph = _assemble_graph(documents, mentions, external_nodes, registry, doc_meta,
+                            employees, assignments, policies, emails)
+    return {
+        "documents": documents,
+        "mentions": mentions,
+        "aliases": aliases,
+        **graph,
+        "triples": assemble_triples(graph["edges"], graph["nodes"]),
+    }
+
+
+def _assemble_graph(
+    documents: DataFrame,
+    mentions: DataFrame,
+    external_nodes: DataFrame,
+    registry: DataFrame,
+    doc_meta: DataFrame | None,
+    employees: DataFrame | None,
+    assignments: DataFrame | None,
+    policies: DataFrame | None,
+    emails: DataFrame | None,
+) -> dict[str, DataFrame]:
+    """The graph both runners build, as lazy ``nodes``, ``edges`` and the
+    ``cooccur`` pairs the inferred edges come from."""
     nodes = registry_nodes(registry).unionByName(external_nodes)
     shadows = None
     if doc_meta is not None:
@@ -89,9 +124,8 @@ def run_kg_pipeline(
     if base_edges is None:
         # LocalRelation form (see _empty_edges) so the anti-join and the
         # union against it optimize away instead of planning real stages
-        base_edges = _empty_edges(spark)
-    inferred = infer_edges(cooccur, base_edges)
-    edges = base_edges.unionByName(inferred)
+        base_edges = _empty_edges(mentions.sparkSession)
+    edges = base_edges.unionByName(infer_edges(cooccur, base_edges))
 
     # non-semantic edge families (D1/J4/J5 + shadow mentions): part of the
     # graph, excluded from triples by predicate (entity_extractor.py:459)
@@ -102,17 +136,7 @@ def run_kg_pipeline(
         edges = edges.unionByName(shadow_mention_edges(shadows))
     if emails is not None and employees is not None:
         edges = edges.unionByName(sent_edges(emails, employees))
-
-    triples = assemble_triples(edges, nodes, broadcast_nodes=broadcast_nodes)
-    return {
-        "documents": documents,
-        "mentions": mentions,
-        "aliases": aliases,
-        "nodes": nodes,
-        "edges": edges,
-        "cooccur": cooccur,
-        "triples": triples,
-    }
+    return {"nodes": nodes, "edges": edges, "cooccur": cooccur}
 
 
 def _empty_edges(spark: SparkSession) -> DataFrame:
@@ -127,10 +151,6 @@ def _empty_edges(spark: SparkSession) -> DataFrame:
     LocalRelation (OptimizeLimitZero), so PropagateEmptyRelation erases
     every join/union against it outright. Literal choices preserve EDGES
     field nullability (non-null literals for non-nullable fields)."""
-    from pyspark.sql import functions as F
-
-    from ..schemas import EDGES
-
     dummies = {
         "src": F.lit(""),
         "predicate": F.lit(""),
@@ -166,18 +186,9 @@ def run_kg_pipeline_checkpointed(
     (plans/checkpoint.py); a restart skips every stage whose input
     fingerprint still matches — the north rule's resume-from-last-committed-
     snapshot semantics. Returns (tables, resumed_flags)."""
-    import hashlib
-
-    from ..operators.chunks import chunk_documents, embed_chunks
-    from ..operators.extraction import extract_documents
-    from ..operators.mentions import detect_mentions
-    from ..operators.linking import build_alias_table, resolve_mentions
-    from ..operators.canonical import apply_canonical_remap, cluster_external_entities
-    from ..operators.chunks import embed_texts_df
-    from .checkpoint import run_stage as _run_stage, table_fingerprints
 
     def run_stage(*a, **kw):
-        return _run_stage(*a, verify_integrity=verify_integrity, **kw)
+        return ck.run_stage(*a, verify_integrity=verify_integrity, **kw)
 
     def fp(*parts: str) -> str:
         return hashlib.md5("\x00".join(parts).encode()).hexdigest()
@@ -187,7 +198,7 @@ def run_kg_pipeline_checkpointed(
     # changing the registry (etc.) invalidates exactly the stages that read
     # it — a path-only fingerprint silently resumes stale snapshots
     # (ADVICE round 1).
-    dfp = table_fingerprints({
+    dfp = ck.table_fingerprints({
         "registry": registry, "doc_meta": doc_meta, "employees": employees,
         "assignments": assignments, "policies": policies, "emails": emails,
     })
@@ -209,75 +220,31 @@ def run_kg_pipeline_checkpointed(
 
     aliases = build_alias_table(registry)
     f_res = fp(gaz_fp, "mentions", dfp["registry"])
-
-    def _build_resolved():
-        m, ext = resolve_mentions(out["mentions_raw"], aliases)
-        out["_external_nodes_unsaved"] = ext
-        return m
-
     out["mentions"], resumed["mentions"] = run_stage(
-        spark, f"{base_dir}/mentions", "mentions", f_res, _build_resolved, key_col="url",
+        spark, f"{base_dir}/mentions", "mentions", f_res,
+        lambda: resolve_mentions(out["mentions_raw"], aliases)[0], key_col="url",
     )
-    # external nodes are derivable from the committed mentions table —
-    # rebuild them deterministically on resume instead of re-running linking
-    from pyspark.sql import functions as F
 
-    ext_nodes = (
-        out["mentions"].filter(F.col("resolution_type") == "external")
-        .groupBy("resolved_id")
-        .agg(F.min(F.lower(F.trim("text"))).alias("name"))
-        .select(
-            F.col("resolved_id").alias("id"), "name",
-            F.lit("ExternalEntity").alias("node_type"),
-            F.lit(0.4).alias("confidence"),
-            F.lit("phase7_extraction").alias("source"),
-            F.create_map().cast("map<string,string>").alias("props"),
+    def _graph() -> dict[str, DataFrame]:
+        # planned inside the stage builders, so a resumed stage plans nothing.
+        # External nodes come from the committed mentions table: a resumed
+        # run derives them without re-running linking.
+        external_nodes = external_entity_nodes(
+            out["mentions"].filter(F.col("resolution_type") == "external")
+            .groupBy(F.col("resolved_id").alias("id"))
+            .agg(F.min(F.lower(F.trim("text"))).alias("name"))
         )
-    )
+        return _assemble_graph(out["documents"], out["mentions"], external_nodes, registry,
+                               doc_meta, employees, assignments, policies, emails)
 
-    from ..operators.edges_full import (
-        document_nodes, mention_edges, metadata_mention_edges, sent_edges,
-        shadow_mention_edges,
-    )
-    from ..operators.graph import (
-        assemble_triples, contradiction_edges, cooccurrence_pairs,
-        ground_truth_edges, infer_edges, registry_nodes, shadow_entities,
-    )
-
-    shadows = shadow_entities(doc_meta) if doc_meta is not None else None
-    nodes = registry_nodes(registry).unionByName(ext_nodes)
-    if shadows is not None:
-        nodes = nodes.unionByName(shadows)
-    nodes = nodes.unionByName(document_nodes(out["documents"]))
     f_nodes = fp(f_res, "nodes", dfp["registry"], dfp["doc_meta"])
     out["nodes"], resumed["nodes"] = run_stage(
-        spark, f"{base_dir}/nodes", "nodes", f_nodes, lambda: nodes, key_col="id",
+        spark, f"{base_dir}/nodes", "nodes", f_nodes, lambda: _graph()["nodes"], key_col="id",
     )
-
-    def _build_edges():
-        base = None
-        if employees is not None and assignments is not None and policies is not None:
-            base = ground_truth_edges(employees, assignments, policies)
-        if doc_meta is not None:
-            flagged = contradiction_edges(doc_meta, registry_nodes(registry))
-            base = flagged if base is None else base.unionByName(flagged)
-        if base is None:
-            base = _empty_edges(spark)
-        cooccur = cooccurrence_pairs(out["mentions"])
-        edges = base.unionByName(infer_edges(cooccur, base))
-        edges = edges.unionByName(mention_edges(out["mentions"]))
-        if doc_meta is not None:
-            edges = edges.unionByName(metadata_mention_edges(doc_meta, registry_nodes(registry)))
-        if shadows is not None:
-            edges = edges.unionByName(shadow_mention_edges(shadows))
-        if emails is not None and employees is not None:
-            edges = edges.unionByName(sent_edges(emails, employees))
-        return edges
-
     f_edges = fp(f_nodes, "edges", dfp["employees"], dfp["assignments"], dfp["policies"],
                  dfp["emails"])
     out["edges"], resumed["edges"] = run_stage(
-        spark, f"{base_dir}/edges", "edges", f_edges, _build_edges, key_col="src",
+        spark, f"{base_dir}/edges", "edges", f_edges, lambda: _graph()["edges"], key_col="src",
         partition_by=["predicate"],
     )
 
@@ -318,5 +285,5 @@ def run_kg_pipeline_checkpointed(
             lambda: embed_chunks(out["chunks"]), key_col="item_id",
         )
 
-    out.pop("_external_nodes_unsaved", None)
     return out, resumed
+

@@ -28,7 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.linking import build_alias_table, resolve_mentions
+from ..cache import release
+from ..operators.linking import build_alias_table, collect_alias_rows, resolve_mentions
 from ..operators.mentions import extract_and_detect
 from ..schemas import PAGES
 
@@ -57,10 +58,7 @@ def stream_mentions(
     canonical form also REPLACES the url column downstream, keeping the
     (url, mention_idx) mention key consistent across variants."""
     aliases = build_alias_table(registry)
-    alias_rows = [
-        (r["alias"], r["entity_id"], r["insertion_idx"])
-        for r in aliases.select("alias", "entity_id", "insertion_idx").collect()
-    ]
+    alias_rows = collect_alias_rows(aliases)
 
     pages = (
         spark.readStream.schema(PAGES)
@@ -88,6 +86,8 @@ def stream_mentions(
         # idempotent per-epoch sink (see module docstring): overwrite this
         # epoch's own subdirectory, never blind-append to the shared dir
         mentions.write.mode("overwrite").parquet(f"{output_dir}/batch_id={batch_id}")
+        # this epoch's caches: kept, they would add up across epochs
+        release(mentions)
         raw.unpersist()
 
     writer = (

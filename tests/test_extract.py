@@ -102,3 +102,32 @@ def test_synthesized_fused_matches_load_pages_chain(spark):
     got = {tuple(r[c] for c in cols)
            for r in synthesize_extract_and_detect(docs, gaz).collect()}
     assert got == want and len(got) > 0
+
+
+def test_mention_adapters_agree_on_label_filter_and_empty_pages(spark):
+    """The three mention entry points share one kernel. With a gazetteer
+    label outside NER_LABELS, the filtered span still takes its
+    mention_idx slot, and a whitespace-only page emits nothing — through
+    every adapter alike."""
+    from ai_knowledge_graph_builder_spark.operators.extraction import extract_documents
+    from ai_knowledge_graph_builder_spark.operators.mentions import (
+        detect_mentions,
+        extract_and_detect,
+        synthesize_extract_and_detect,
+    )
+
+    gaz = [("alpha", "MISC"), ("beta", "ORG")]
+    texts = ["alpha beta gamma", "   "]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    pages = spark.createDataFrame(
+        [(f"doc://{i:08d}", render_html(f"doc {i}", t)) for i, t in enumerate(texts)],
+        "url string, html binary",
+    )
+    runs = [
+        detect_mentions(extract_documents(pages), gaz),
+        extract_and_detect(pages, gaz),
+        synthesize_extract_and_detect(docs, gaz),
+    ]
+    want = [("doc://00000000", None, 1, "beta", "ORG", 6, 10)]
+    for df in runs:
+        assert sorted(tuple(r) for r in df.collect()) == want

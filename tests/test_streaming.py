@@ -13,10 +13,15 @@ def _mention_key(r):
     return (r["url"], r["mention_idx"], r["text"], r["resolved_id"], r["resolution_method"])
 
 
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
 def test_incremental_stream_matches_batch(spark, corpus, tmp_path):
     # increments must arrive in event-time order: the watermark advanced by
     # batch 1 DROPS older pages as late data (observed:
     # numRowsDroppedByWatermark) — which is the intended re-crawl semantics
+    persisted_before = _persisted(spark)
     pages_pd = corpus["pages"].sort_values("warc_ts").reset_index(drop=True)
     registry = spark.createDataFrame(corpus["registry"])
     in_dir, out_dir, ck = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
@@ -36,6 +41,8 @@ def test_incremental_stream_matches_batch(spark, corpus, tmp_path):
 
     got = {_mention_key(r) for r in spark.read.parquet(out_dir).collect()}
     assert len(got) > n1
+    # each epoch released the caches its linking made: none pile up
+    assert _persisted(spark) <= persisted_before
 
     # batch reference over the full corpus
     docs = extract_documents(spark.createDataFrame(pages_pd))
