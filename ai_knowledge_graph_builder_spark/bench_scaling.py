@@ -1,117 +1,61 @@
-"""Scaling-efficiency probe: the SAME KG-pipeline job at two parallelism
-levels on the same (replicated) input — the sandbox stand-in for N vs 4N
-executors (BASELINE.json north_rule).
+"""Thread-scaling probe for the N-vs-4N criterion (BASELINE.json north
+rule): the SAME KG job on the SAME input at local[N] and local[4N], with
+N = nproc // 4 (at least 1) taken from the host.
 
-The sf corpus is replicated deterministically (doc_id × replica suffix) so the
-job is large enough that per-document work, not session/codegen overhead,
-dominates; both runs use identical input and plan."""
+Each point is one ``slice_kg_run`` in a fresh process (``python -m
+ai_knowledge_graph_builder_spark.bench_scaling probe <cpus> <reps> <sf_dir>``),
+timed min-of-3 behind a hypervisor steal guard. A least-squares fit
+T = F + docs/rate over three input sizes separates the per-session fixed
+cost F (JVM start, Python worker imports) from the marginal rate, and
+efficiency = rate(4N) / (4 · rate(N)). ``python bench.py --scaling`` runs it.
+"""
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
+import subprocess
+import sys
+import tempfile
 import time
 
 from pyspark.sql import functions as F
 
-from .driver_queries import flagship_gazetteer, flagship_registry_df
-from .operators.extraction import extract_documents
-from .operators.linking import build_alias_table, resolve_mentions
-from .operators.mentions import detect_mentions
-from .plans.pipeline import _empty_edges
+from .session import PACKAGE_ROOT
+
+#: replicas of the sf corpus per point. At sf0.1 on a 4-core host a point
+#: costs 13-16 s of fixed cost plus ~0.14 ms/doc at local[1] and ~0.07 ms/doc
+#: at local[4], and each process ~10 s more to start and stop, so fixed cost
+#: and steal-guard retries, not input size, set the run time: ~10.5 min with
+#: one retry.
+SIZES = (1, 8, 16)
 
 
-def replicated_pages(spark, sf_dir: str, replicas: int):
-    """documents × replicas → pages; html synthesized in the same
-    mapInPandas pass that the pipeline will immediately consume."""
+def slice_kg_run(spark, sf_dir: str, replicas: int, out_dir: str) -> None:
+    """documents × ``replicas`` → synthesized (url, html) pages → fused
+    extraction+NER → linking → (url, resolved_id, resolution_type) written
+    to ``out_dir``."""
     from collections.abc import Iterator
 
     import pandas as pd
 
-    from .functions.html import render_html
-
-    # the base parquet is a single file (= one input split): repartition
-    # BEFORE the explode so page synthesis parallelizes across all cores
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text", "lang")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(replicas - 1))))
-    )
-
-    def _mk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls = [f"doc://{d:08d}-{r:04d}" for d, r in zip(pdf["doc_id"], pdf["rep"])]
-            htmls = [render_html(u, t) for u, t in zip(urls, pdf["text"])]
-            yield pd.DataFrame({"url": urls, "html": htmls, "text": pdf["text"], "lang": pdf["lang"]})
-
-    return docs.mapInPandas(_mk, "url string, html binary, text string, lang string")
-
-
-def timed_kg_run(spark, sf_dir: str, replicas: int, work_dir: str | None = None) -> tuple[float, int]:
-    """Time the PRODUCTION path: checkpointed stages materialized to parquet
-    (plans/checkpoint.py), exactly what a cluster run does. Stage tables are
-    written under ``work_dir`` (a fresh temp dir by default)."""
-    import shutil
-    import tempfile
-
-    from .operators.graph import cooccurrence_pairs as _cooccur, infer_edges as _infer
-    from .plans.checkpoint import run_stage
-
-    wd = work_dir or tempfile.mkdtemp(prefix="kg-bench-")
-    pages = replicated_pages(spark, sf_dir, replicas)
-    registry = flagship_registry_df(spark)
-    aliases = build_alias_table(registry)
-
-    t0 = time.perf_counter()
-    documents, _ = run_stage(
-        spark, f"{wd}/documents", "documents", "bench",
-        lambda: extract_documents(pages), key_col="url",
-    )
-    mentions_raw, _ = run_stage(
-        spark, f"{wd}/mentions_raw", "mentions_raw", "bench",
-        lambda: detect_mentions(documents, flagship_gazetteer()), key_col="url",
-    )
-    mentions, _ = run_stage(
-        spark, f"{wd}/mentions", "mentions", "bench",
-        lambda: resolve_mentions(mentions_raw, aliases)[0], key_col="url",
-    )
-    inferred, _ = run_stage(
-        spark, f"{wd}/edges", "edges", "bench",
-        lambda: _infer(_cooccur(mentions), _empty_edges(spark)), key_col="src",
-    )
-    inferred.count()
-    elapsed = time.perf_counter() - t0
-
-    base = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    if work_dir is None:
-        shutil.rmtree(wd, ignore_errors=True)
-    return elapsed, base * replicas
-
-
-def slice_kg_run(spark, sf_dir: str, replicas: int, rep_offset: int, out_dir: str) -> int:
-    """One executor's share of the job: extraction + NER + linking over the
-    replica slice [rep_offset, rep_offset+replicas), mentions written to
-    ``out_dir``. Slices are disjoint by construction (url embeds the replica
-    number), exactly like a hash-partitioned input split on a cluster."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
+    from .driver_queries import flagship_gazetteer, flagship_registry_df
     from .functions.html import render_html
     from .operators.linking import build_alias_table, resolve_mentions
-    from .driver_queries import flagship_gazetteer, flagship_registry_df
+    from .operators.mentions import extract_and_detect
 
+    # the base parquet is one input split: repartition BEFORE the explode so
+    # page synthesis runs on every core
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("rep", F.explode(F.sequence(F.lit(rep_offset), F.lit(rep_offset + replicas - 1))))
+        .withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(replicas - 1))))
     )
 
-    # memory-traffic discipline (the single-host bus is the binding
-    # constraint — BENCH.md control probes): emit ONLY (url, html); the
-    # oracle text/lang columns never reach extraction and carrying them
-    # through the Arrow boundary doubles per-doc byte traffic for nothing
+    # only (url, html) cross into the extraction worker: the oracle text
+    # columns would double the per-doc Arrow traffic for nothing
     def _mk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             urls = [f"doc://{d:08d}-{r:04d}" for d, r in zip(pdf["doc_id"], pdf["rep"])]
@@ -119,83 +63,14 @@ def slice_kg_run(spark, sf_dir: str, replicas: int, rep_offset: int, out_dir: st
             yield pd.DataFrame({"url": urls, "html": htmls})
 
     pages = docs.mapInPandas(_mk, "url string, html binary")
-    # fused extraction+NER (one JVM↔Python crossing of the html payload —
-    # the same traffic shape as a cluster scan feeding the Python workers);
-    # presalted: the synthesis explode above already distributed pages
-    # uniformly — the salted repartition would re-shuffle every html byte
-    from .operators.mentions import extract_and_detect
-
+    # presalted: the explode above already spread the pages evenly
     mentions_raw = extract_and_detect(pages, flagship_gazetteer(), presalted=True)
-    # column pruning for THIS job: the flagship consumes the resolved
-    # relation only through co-occurrence (url, resolved_id,
-    # resolution_type); mention_idx/label ride along for the linking
-    # aggregation's arrival attribution. The full-width mention sink (text,
-    # offsets, confidences — D1 edges) belongs to the checkpointed pipeline
-    # path, not this query, and carrying it through the cache + the slice
-    # write was pure non-scaling byte traffic (the write stage measured
-    # SLOWER at 24 cores than 6).
+    # the mention columns linking needs; the write keeps what co-occurrence reads
     mentions_raw = mentions_raw.select("url", "mention_idx", "text", "label")
     aliases = build_alias_table(flagship_registry_df(spark))
     mentions, _ = resolve_mentions(mentions_raw, aliases)
     mentions.select("url", "resolved_id", "resolution_type").write.mode(
         "overwrite").parquet(out_dir)
-    n = spark.read.parquet(f"{sf_dir}/documents.parquet").count() * replicas
-    return n
-
-
-def slice_kg_run_r1(spark, sf_dir: str, replicas: int, rep_offset: int,
-                    out_dir: str) -> int:
-    """Round-1-FAITHFUL slice job (the 0.91-vs-0.30 autopsy, VERDICT r4
-    'What's wrong' #2): html synthesized INSIDE the timed job, UNFUSED
-    extract_documents → detect_mentions (so the page payload crosses the
-    JVM↔Python boundary three times instead of once), full-width mention
-    write — the job shape round 1's 4-JVM probe actually timed, with
-    ~3-4× the per-doc CPU of the current fused slice. Linking is today's
-    resolve_mentions (the r1 file is otherwise reproduced verbatim from
-    commit d643fcc); extraction+NER dominate the slice either way."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from .functions.html import render_html
-    from .operators.extraction import extract_documents
-    from .operators.mentions import detect_mentions
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text", "lang")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("rep", F.explode(
-            F.sequence(F.lit(rep_offset), F.lit(rep_offset + replicas - 1))))
-    )
-
-    def _mk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls = [f"doc://{d:08d}-{r:04d}" for d, r in zip(pdf["doc_id"], pdf["rep"])]
-            htmls = [render_html(u, t) for u, t in zip(urls, pdf["text"])]
-            yield pd.DataFrame({"url": urls, "html": htmls,
-                                "text": pdf["text"], "lang": pdf["lang"]})
-
-    pages = docs.mapInPandas(_mk, "url string, html binary, text string, lang string")
-    documents = extract_documents(pages)
-    mentions_raw = detect_mentions(documents, flagship_gazetteer())
-    aliases = build_alias_table(flagship_registry_df(spark))
-    mentions, _ = resolve_mentions(mentions_raw, aliases)
-    mentions.write.mode("overwrite").parquet(out_dir)
-    n = spark.read.parquet(f"{sf_dir}/documents.parquet").count() * replicas
-    return n
-
-
-def finish_kg(spark, mentions_dirs: list[str]):
-    """The small global tail: co-occurrence counting + rule inference over
-    all executors' mentions tables (two-level aggregation — partial work
-    happened inside each slice's dedup, global merge here)."""
-    from .operators.graph import cooccurrence_pairs, infer_edges
-    from .plans.pipeline import _empty_edges
-
-    mentions = spark.read.parquet(*mentions_dirs)
-    inferred = infer_edges(cooccurrence_pairs(mentions), _empty_edges(spark))
-    return inferred.count()
 
 
 def _steal_snapshot() -> tuple[int, int]:
@@ -217,8 +92,6 @@ def _guarded_run(fn, max_tries: int = 5, steal_budget: float = 0.02,
     retry up to ``max_tries``, then keep the best anyway. The steal fraction
     is recorded alongside every published point so a dirty point is visible,
     never silent."""
-    import time as _t
-
     best, best_steal = None, None
     for i in range(max_tries):
         s0, t0 = _steal_snapshot()
@@ -229,36 +102,59 @@ def _guarded_run(fn, max_tries: int = 5, steal_budget: float = 0.02,
             best, best_steal = sec, frac
         if frac <= steal_budget and i >= 2:  # at least three tries (min-of-3)
             return best, best_steal
-        _t.sleep(backoff_s if frac > steal_budget else 0)
+        time.sleep(backoff_s if frac > steal_budget else 0)
     return best, best_steal
 
 
-def _worker_main(cpus: str, reps: int, offset: int, out_dir: str, sf_dir: str,
-                 job: str = "fused") -> None:
-    import json
-    import time as _t
+def fit_rate(points: list[tuple[float, float]]) -> tuple[float, float] | None:
+    """Least-squares fit of T = F + docs/rate over ``(docs, sec)`` points.
+    Returns ``(fixed_cost_s, docs_per_s)``, or None when the slope is not
+    positive: noise inverted the timings, and no rate can be read off them."""
+    xs, ys = [p[0] for p in points], [p[1] for p in points]
+    mx, my = sum(xs) / len(xs), sum(ys) / len(ys)
+    slope = sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / sum((x - mx) ** 2 for x in xs)
+    if slope <= 0:
+        return None
+    return my - slope * mx, 1.0 / slope
 
+
+def _probe_main(cpus: int, reps: int, sf_dir: str) -> None:
+    """One timed ``slice_kg_run`` at local[cpus]; prints ``{"sec": ...}``.
+    Spark's scratch and the mention sink live in a fresh temp dir, removed
+    on exit, so concurrent probes never share files."""
     from .session import get_spark
 
-    # Declare the REAL core budget to the JVM: a worker pinned to 8 cores
-    # but seeing 32 host CPUs sizes its GC/compiler/daemon pools for 32 —
-    # 4 such workers thrash the hypervisor scheduler and INDUCE steal
-    # (measured: the 4x8 point at 320 reps = 157.6 s at 13.4% steal with
-    # auto-sized G1 vs 80.1 s at 1.4% steal with this config). Cluster
-    # managers pass exactly this information to executor JVMs.
-    # job="r1" additionally supports SPARK_GRAFT_R1_AUTOGC=1 to drop these
-    # flags entirely — the fully round-1-faithful JVM configuration.
-    extra = {"spark.local.dir": f"/dev/shm/spark-w{offset}"}
-    if not (job == "r1" and os.environ.get("SPARK_GRAFT_R1_AUTOGC")):
-        extra["spark.driver.extraJavaOptions"] = (
-            f"-XX:ActiveProcessorCount={cpus} -XX:+UseParallelGC")
-    spark = get_spark(f"kg-worker-{offset}", master=f"local[{cpus}]",
-                      extra_conf=extra)
-    spark.sparkContext.setLogLevel("ERROR")
-    run = slice_kg_run_r1 if job == "r1" else slice_kg_run
-    t0 = _t.perf_counter()
-    n = run(spark, sf_dir, reps, offset, out_dir)
-    print(json.dumps({"offset": offset, "docs": n, "sec": round(_t.perf_counter() - t0, 1)}))
+    scratch = tempfile.mkdtemp(prefix="kg-probe-")
+    try:
+        # a declared core budget and ParallelGC for the probe JVM (both
+        # widths alike): G1 sizes its concurrent threads for every host CPU,
+        # which then contend with the task threads of a narrow session
+        spark = get_spark(f"kg-probe-{cpus}-{reps}", master=f"local[{cpus}]",
+                          extra_conf={"spark.local.dir": f"{scratch}/spark",
+                                      "spark.driver.extraJavaOptions":
+                                          f"-XX:ActiveProcessorCount={cpus} -XX:+UseParallelGC"})
+        spark.sparkContext.setLogLevel("ERROR")
+        t0 = time.perf_counter()
+        slice_kg_run(spark, sf_dir, reps, f"{scratch}/out")
+        print(json.dumps({"sec": round(time.perf_counter() - t0, 2)}))
+        spark.stop()
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def probe_once(cpus: int, reps: int, sf_dir: str) -> float:
+    """Seconds of one ``probe`` run in a fresh process. The child imports
+    this package from its own root, whatever the working directory."""
+    path = os.environ.get("PYTHONPATH")
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join([PACKAGE_ROOT] + ([path] if path else []))}
+    p = subprocess.run(
+        [sys.executable, "-m", "ai_knowledge_graph_builder_spark.bench_scaling",
+         "probe", str(cpus), str(reps), sf_dir],
+        capture_output=True, text=True, env=env)
+    if p.returncode != 0 or not p.stdout.strip():
+        raise RuntimeError(f"scaling probe (cpus={cpus}, reps={reps}) died "
+                           f"rc={p.returncode}; stderr tail: {p.stderr[-2000:]}")
+    return json.loads(p.stdout.strip().splitlines()[-1])["sec"]
 
 
 def _base_docs(sf_dir: str) -> int:
@@ -267,761 +163,38 @@ def _base_docs(sf_dir: str) -> int:
     return duckdb.sql(f"SELECT count(*) FROM '{sf_dir}/documents.parquet'").fetchone()[0]
 
 
-def materialize_pages(spark, sf_dir: str, replicas: int, out_dir: str) -> None:
-    """Write the replicated (url, html) page table to parquet ONCE, outside
-    any timed window. The north rule's input is a PRE-EXISTING table of web
-    pages; synthesizing pages inside the timed job both charges the probe
-    for data-gen scaffolding and adds a JVM↔Python crossing of the html
-    payload that the production path (one scan → one Arrow transfer into
-    the fused extract+NER worker) does not have."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from .functions.html import render_html
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(replicas - 1))))
-    )
-
-    def _mk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls = [f"doc://{d:08d}-{r:04d}" for d, r in zip(pdf["doc_id"], pdf["rep"])]
-            htmls = [render_html(u, t) for u, t in zip(urls, pdf["text"])]
-            yield pd.DataFrame({"url": urls, "html": htmls})
-
-    # many output files: the scan side sizes splits by COMPRESSED bytes
-    # (BENCH.md probe trap 11) and this table must fan out across 24 cores
-    docs.mapInPandas(_mk, "url string, html binary").repartition(96).write.mode(
-        "overwrite").parquet(out_dir)
-
-
-def _pages_cache_path(sf_dir: str, reps: int) -> str:
-    """Cache path for the materialized page table, keyed by (sf name, reps)
-    PLUS a short content/code hash — the base parquet's mtime+size and the
-    html-render kernel source — so a change to the corpus or to render_html
-    invalidates the cache instead of silently timing stale pages
-    (ADVICE r4 #2)."""
-    import hashlib
-    import inspect
-    import os
-
-    from .functions.html import render_html
-
-    st = os.stat(f"{sf_dir}/documents.parquet")
-    ver = hashlib.md5(
-        f"{st.st_mtime_ns}:{st.st_size}:".encode()
-        + inspect.getsource(render_html).encode()
-    ).hexdigest()[:8]
-    sfname = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/dev/shm/kg-pages-{sfname}-{reps}-{ver}"
-    # reap superseded generations for this (sf, reps) key — the content
-    # hash in the name means every corpus/kernel change would otherwise
-    # orphan a multi-GB page table on the RAM-backed tmpfs until it fills.
-    # Age-guarded (ADVICE r5 #3): only reap generations untouched for
-    # >30 min, so a concurrently running probe still scanning an older
-    # generation (probe runs are minutes) doesn't lose its input mid-job.
-    import glob
-    import shutil
-    import time as _t
-
-    for old in glob.glob(f"/dev/shm/kg-pages-{sfname}-{reps}-*"):
-        if old == path:
-            continue
-        try:
-            age_s = _t.time() - os.stat(old).st_mtime
-        except OSError:
-            continue
-        if age_s > 1800:
-            shutil.rmtree(old, ignore_errors=True)
-    return path
-
-
-def scan_kg_run(spark, pages_path: str, sf_dir: str, out_dir: str) -> None:
-    """The timed production-shaped job: scan the pages table → ONE Arrow
-    crossing into fused extraction+NER → linking → mention sink. Identical
-    operator chain to slice_kg_run minus the in-job page synthesis."""
-    from .driver_queries import flagship_gazetteer, flagship_registry_df
-    from .operators.mentions import extract_and_detect
-
-    pages = spark.read.parquet(pages_path)
-    mentions_raw = extract_and_detect(pages, flagship_gazetteer(), presalted=True)
-    mentions_raw = mentions_raw.select("url", "mention_idx", "text", "label")
-    aliases = build_alias_table(flagship_registry_df(spark))
-    mentions, _ = resolve_mentions(mentions_raw, aliases)
-    mentions.select("url", "resolved_id", "resolution_type").write.mode(
-        "overwrite").parquet(out_dir)
-
-
-def _probe_main(cpus: str, reps: int, sf_dir: str, scan: bool = False) -> None:
-    """One timed slice run at local[cpus] in a fresh process; prints JSON.
-    ``scan`` mode reads a pre-materialized page table (built outside the
-    timed window, cached under /dev/shm keyed by (sf, reps)) instead of
-    synthesizing pages in-job."""
-    import json
-    import os
-    import time as _t
-
-    from .session import get_spark
-
-    # ParallelGC + a declared core budget for the probe JVM (both widths —
-    # same job, same config): G1's auto-sized concurrent/refinement threads
-    # (sized for the 32 visible CPUs) contend with the task threads and
-    # induce hypervisor steal; A/B best-of-3 at local[24]: 49.1 s (G1) vs
-    # 41.5 s (ParallelGC) at matched steal, no change at local[6]. A real
-    # cluster manager hands executor JVMs exactly this core count.
-    spark = get_spark(f"kg-probe-{cpus}-{reps}", master=f"local[{cpus}]",
-                      extra_conf={"spark.local.dir": "/dev/shm/spark-probe",
-                                  # compressed-scan partition-collapse guard
-                                  # (BENCH.md probe trap 11): the page table
-                                  # must split across all cores
-                                  "spark.sql.files.maxPartitionBytes": "1m",
-                                  "spark.driver.extraJavaOptions":
-                                      f"-XX:ActiveProcessorCount={cpus} -XX:+UseParallelGC"})
-    spark.sparkContext.setLogLevel("ERROR")
-    if scan:
-        pages_path = _pages_cache_path(sf_dir, reps)
-        if not os.path.exists(f"{pages_path}/_SUCCESS"):
-            materialize_pages(spark, sf_dir, reps, pages_path)
-        else:
-            # refresh mtime on every reuse so the 30-min age guard in
-            # _pages_cache_path measures time since LAST USE, not since
-            # materialization — a generation being scanned right now can
-            # never look stale to a concurrent reaper (self-review r6 #2)
-            os.utime(pages_path)
-        t0 = _t.perf_counter()
-        if scan == "ner":
-            # stage-decomposition probe: scan → fused extract+NER → count
-            # (no linking shuffle, no persist, no sink)
-            from .driver_queries import flagship_gazetteer
-            from .operators.mentions import extract_and_detect
-
-            pages = spark.read.parquet(pages_path)
-            extract_and_detect(pages, flagship_gazetteer(), presalted=True).count()
-        else:
-            scan_kg_run(spark, pages_path, sf_dir, "/dev/shm/probe-out")
-        print(json.dumps({"sec": round(_t.perf_counter() - t0, 2)}))
-        return
-    t0 = _t.perf_counter()
-    slice_kg_run(spark, sf_dir, reps, 0, "/dev/shm/probe-out")
-    print(json.dumps({"sec": round(_t.perf_counter() - t0, 2)}))
-
-
-def run_thread_scaling(sf_dir: str = "/root/testdata/sf0.1",
-                       sizes: tuple[int, ...] = (80, 160, 320),
-                       n_cores: int = 6) -> dict:
-    """The north rule's sanctioned sandbox form: the SAME job on the SAME
-    input at local[N] vs local[4N]. Each point is min-of-3 fresh processes
-    behind a hypervisor steal-guard (a point whose run saw > 2% stolen
-    ticks is re-measured — neighbor-VM noise, not the engine, was observed
-    swinging identical runs 22 s ↔ 101 s); efficiency comes from
-    least-squares MARGINAL throughput over three input sizes, which cancels
-    per-session fixed cost (JVM start, N vs 4N Python daemon imports).
-
-    N defaults to 6 (4N = 24) rather than 8/32: taking EVERY host core for
-    task threads leaves none for the JVM's GC/dispatcher threads, the
-    Python daemons, and the OS, and this 32-vCPU guest only gets ~0.8 of
-    its cores from the oversubscribed host to begin with (pure-CPU control
-    probe) — a cliff measured at exactly local[32] (link phase 7.4 s at 24
-    cores → 22.7 s at 32). Real cluster sizing provisions executor cores
-    below the host core count for the same reason, so 6-vs-24 is the
-    faithful emulation and 8-vs-32 the artifact-ridden one."""
-    import json
-    import shutil
-    import subprocess
-    import sys
-
-    def one_point(cpus: int, reps: int) -> tuple[float, float]:
-        def run() -> float:
-            shutil.rmtree("/dev/shm/probe-out", ignore_errors=True)
-            shutil.rmtree("/dev/shm/spark-probe", ignore_errors=True)
-            p = subprocess.run(
-                [sys.executable, "-m", "ai_knowledge_graph_builder_spark.bench_scaling",
-                 "probe", str(cpus), str(reps), sf_dir],
-                capture_output=True, text=True, cwd="/root/repo")
-            if p.returncode != 0 or not p.stdout.strip():
-                raise RuntimeError(
-                    f"scaling probe (cpus={cpus}, reps={reps}) died "
-                    f"rc={p.returncode}; stderr tail: {p.stderr[-2000:]}"
-                )
-            return json.loads(p.stdout.strip().splitlines()[-1])["sec"]
-
-        return _guarded_run(run)
-
+def run_thread_scaling(sf_dir: str) -> dict:
+    """local[N] vs local[4N] on the same job and input, N = nproc // 4.
+    Each point is the min of three fresh-process runs; a width whose fitted
+    slope is not positive marks the result ``invalid`` (value None)."""
+    nproc = len(os.sched_getaffinity(0))
+    n = max(1, nproc // 4)
     base = _base_docs(sf_dir)
-    res: dict = {"sf_dir": sf_dir,
-                 "method": f"local[{n_cores}] vs local[{4 * n_cores}], same "
-                           "job+input; min-of-3 steal-guarded points; "
-                           "least-squares marginal throughput"}
+    res: dict = {"metric": "scaling_efficiency_N_to_4N", "value": None, "unit": "ratio",
+                 "method": f"local[{n}] vs local[{4 * n}], same job+input; min-of-3 "
+                           f"steal-guarded fresh-process points at {list(SIZES)} "
+                           "replicas; least-squares T = F + docs/rate",
+                 "sf_dir": sf_dir, "nproc": nproc}
     rates = {}
-    for cpus in (n_cores, 4 * n_cores):
+    for cpus in (n, 4 * n):
         pts = []
-        for reps in sizes:
-            sec, steal = one_point(cpus, reps)
+        for reps in SIZES:
+            sec, steal = _guarded_run(lambda: probe_once(cpus, reps, sf_dir))
             pts.append({"docs": base * reps, "sec": sec, "steal_frac": round(steal, 4)})
-        xs = [p["docs"] for p in pts]
-        ys = [p["sec"] for p in pts]
-        mx, my = sum(xs) / len(xs), sum(ys) / len(ys)
-        slope = sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / sum((x - mx) ** 2 for x in xs)
-        rates[cpus] = 1.0 / max(slope, 1e-12)
-        res[f"cores_{cpus}"] = {"points": pts,
-                                "fixed_cost_s": round(my - slope * mx, 1),
-                                "marginal_docs_per_sec": round(rates[cpus], 1)}
-    res["metric"] = "scaling_efficiency_N_to_4N"
-    res["value"] = round(rates[4 * n_cores] / (4 * rates[n_cores]), 3)
-    res["unit"] = "ratio"
-    shutil.rmtree("/dev/shm/probe-out", ignore_errors=True)
-    shutil.rmtree("/dev/shm/spark-probe", ignore_errors=True)
-    return res
-
-
-def _spinner_ceiling(n: int, seconds: float = 8.0) -> float:
-    """Attainable-CPU probe: n pure-Python spinner processes for ``seconds``;
-    returns total iterations. No memory traffic, no JVM — measures how much
-    CPU the hypervisor actually delivers to an n-wide burst RIGHT NOW.
-    Measured: an idle-guest 24-wide burst can see 0.8% steal in one window
-    and 19% in another purely from neighbor-VM load — the host's slack for
-    wide bursts is time-varying, so any honest N-vs-4N number must carry the
-    same-window ceiling next to it."""
-    import multiprocessing as mp
-    import time as _t
-
-    def spin(q, t_end):
-        k = 0
-        while _t.perf_counter() < t_end:
-            for _ in range(10000):
-                k += 1
-        q.put(k)
-
-    q = mp.Queue()
-    t_end = _t.perf_counter() + seconds
-    ps = [mp.Process(target=spin, args=(q, t_end)) for _ in range(n)]
-    for p in ps:
-        p.start()
-    for p in ps:
-        p.join()
-    return float(sum(q.get() for _ in ps))
-
-
-# kernel texts keyed by sf_dir (ADVICE r4 #5: a process-global unkeyed cache
-# returned stale texts if sf_dir changed within one process); worker
-# processes inherit the parent's loaded entry via fork.
-_KERNEL_TEXTS: dict[str, list[str]] = {}
-_KERNEL_SF: str | None = None  # the sf_dir _kernel_work should read
-
-
-def _kernel_work(args: tuple[int, int, int]) -> int:
-    lo, hi, reps = args
-    from .driver_queries import flagship_gazetteer
-    from .functions.html import extract_text, render_html
-    from .functions.ner import RuleNER
-
-    texts = _KERNEL_TEXTS[_KERNEL_SF]
-    det = RuleNER(flagship_gazetteer())
-    n = 0
-    for r in range(reps):
-        for i in range(lo, hi):
-            h = render_html(f"doc://{i:08d}-{r:04d}", texts[i])
-            n += len(det(extract_text(h)))
-    return n
-
-
-def _kernel_marginal(sf_dir: str, nproc: int, reps_lo: int, reps_hi: int) -> float:
-    """Marginal docs/s of the pure-Python per-document kernel chain
-    (render → extract → NER) under plain multiprocessing — the same work
-    the Spark NER stage does, with ZERO engine. This is the workload's
-    single-host attainable ceiling: unlike the ALU-only spinner, it carries
-    the same string/memory traffic per doc, so it hits the same host memory
-    wall the engine does. Spark efficiency divided by this isolates ENGINE
-    overhead from host physics."""
-    import multiprocessing as mp
-    import time as _t
-
-    global _KERNEL_SF
-    if sf_dir not in _KERNEL_TEXTS:
-        import duckdb
-
-        _KERNEL_TEXTS[sf_dir] = [r[0] for r in duckdb.sql(
-            f"SELECT text FROM '{sf_dir}/documents.parquet'").fetchall()]
-    _KERNEL_SF = sf_dir
-    n_docs = len(_KERNEL_TEXTS[sf_dir])
-    chunk = n_docs // nproc
-
-    def one(reps: int) -> float:
-        jobs = [(i * chunk, (i + 1) * chunk if i < nproc - 1 else n_docs, reps)
-                for i in range(nproc)]
-        t0 = _t.perf_counter()
-        with mp.Pool(nproc) as p:
-            p.map(_kernel_work, jobs)
-        return _t.perf_counter() - t0
-
-    t_lo, t_hi = one(reps_lo), one(reps_hi)
-    if t_hi <= t_lo:
-        return 0.0
-    return n_docs * (reps_hi - reps_lo) / (t_hi - t_lo)
-
-
-def _paired_probe(sf_dir: str, cpus: int, reps: int, scan: bool = False) -> tuple[float, float]:
-    import json
-    import shutil
-    import subprocess
-    import sys
-
-    shutil.rmtree("/dev/shm/probe-out", ignore_errors=True)
-    shutil.rmtree("/dev/shm/spark-probe", ignore_errors=True)
-    s0, t0 = _steal_snapshot()
-    p = subprocess.run(
-        [sys.executable, "-m", "ai_knowledge_graph_builder_spark.bench_scaling",
-         "probe", str(cpus), str(reps), sf_dir] + (["scan"] if scan else []),
-        capture_output=True, text=True, cwd="/root/repo")
-    s1, t1 = _steal_snapshot()
-    if p.returncode != 0 or not p.stdout.strip():
-        raise RuntimeError(f"probe died rc={p.returncode}: {p.stderr[-2000:]}")
-    sec = json.loads(p.stdout.strip().splitlines()[-1])["sec"]
-    return sec, (s1 - s0) / max(t1 - t0, 1)
-
-
-def one_paired_cycle(sf_dir: str, sizes: tuple[int, int], n_cores: int,
-                     base: int, scan: bool = False) -> dict:
-    """One interleaved cycle: spinner ceiling, then lo/hi-size Spark probes
-    at local[N] and local[4N], all inside one host-noise window. A cycle
-    whose hi-size run came back FASTER than the lo-size run (timing inverted
-    by noise) is marked ``invalid`` rather than clamped — the old
-    max(Δt, 1e-9) clamp turned such cycles into absurd ~1e12 marginal
-    throughputs that silently poisoned the median."""
-    lo, hi = sizes
-    ceil_n = _spinner_ceiling(n_cores)
-    ceil_4n = _spinner_ceiling(4 * n_cores)
-    attainable = ceil_4n / ceil_n / 4.0
-    cyc: dict = {"attainable": round(attainable, 3)}
-    # same-window workload ceiling: the engine-free kernel chain at both
-    # widths (reps sized for multi-second points)
-    k_n = _kernel_marginal(sf_dir, n_cores, 32, 64)
-    k_4n = _kernel_marginal(sf_dir, 4 * n_cores, 96, 192)
-    if k_n > 0 and k_4n > 0:
-        cyc["kernel_eff"] = round(k_4n / (4 * k_n), 3)
-    if scan:
-        cyc["protocol"] = "scan"
-    marg = {}
-    for cpus in (n_cores, 4 * n_cores):
-        # SAME sizes at both widths: throughput rises mildly with input
-        # size (better split packing), so asymmetric per-width sizes would
-        # bias the ratio — noise is handled by the cross-cycle median, not
-        # by stretching deltas
-        t_lo, st_lo = _paired_probe(sf_dir, cpus, lo, scan=scan)
-        t_hi, st_hi = _paired_probe(sf_dir, cpus, hi, scan=scan)
-        cyc[f"c{cpus}"] = {"lo_s": round(t_lo, 2), "hi_s": round(t_hi, 2),
-                           "steal": [round(st_lo, 4), round(st_hi, 4)]}
-        if t_hi <= t_lo:
-            cyc["invalid"] = f"non-monotone timing at {cpus} cores (hi<=lo)"
-            return cyc
-        if max(st_lo, st_hi) > 0.05:
-            cyc["invalid"] = f"steal burst at {cpus} cores (>{5}%)"
-            return cyc
-        marg[cpus] = base * (hi - lo) / (t_hi - t_lo)
-        cyc[f"c{cpus}"]["marginal_docs_per_sec"] = round(marg[cpus], 1)
-    eff = marg[4 * n_cores] / (4 * marg[n_cores])
-    cyc["efficiency"] = round(eff, 3)
-    cyc["normalized"] = round(eff / max(attainable, 1e-9), 3)
-    if cyc.get("kernel_eff"):
-        cyc["normalized_kernel"] = round(eff / cyc["kernel_eff"], 3)
-    return cyc
-
-
-def summarize_paired_cycles(cycles: list[dict], max_steal: float | None = None) -> dict:
-    """Aggregate paired cycles: median/IQR over valid ones. ``max_steal``
-    additionally drops cycles where ANY probe saw more than that fraction
-    of hypervisor-stolen ticks (a dirty window the in-cycle pairing can't
-    fully cancel); the drop count is reported, never silent."""
-    import statistics
-
-    valid = [c for c in cycles if "invalid" not in c and "efficiency" in c]
-    # physical plausibility: N->4N marginal efficiency outside (0, 2] is a
-    # degenerate regression slope (near-zero or inverted denominator), not a
-    # measurement — dropped EXPLICITLY, never silently
-    n_implausible = sum(1 for c in valid if not 0.0 < c["efficiency"] <= 2.0)
-    valid = [c for c in valid if 0.0 < c["efficiency"] <= 2.0]
-    if max_steal is not None:
-        def _clean(c):
-            return all(s <= max_steal
-                       for k in c if k.startswith("c")
-                       for s in c[k].get("steal", []))
-        n_dirty = sum(1 for c in valid if not _clean(c))
-        valid = [c for c in valid if _clean(c)]
-    out: dict = {"metric": "scaling_efficiency_N_to_4N", "unit": "ratio",
-                 "n_cycles": len(cycles), "n_valid": len(valid),
-                 "n_dropped_implausible": n_implausible}
-    if max_steal is not None:
-        out["max_steal_filter"] = max_steal
-        out["n_dropped_dirty"] = n_dirty
-    if valid:
-        effs = sorted(c["efficiency"] for c in valid)
-        norms = sorted(c["normalized"] for c in valid)
-        q = lambda xs, p: xs[min(len(xs) - 1, int(p * len(xs)))]
-        out["value"] = round(statistics.median(effs), 3)
-        out["iqr"] = [round(q(effs, 0.25), 3), round(q(effs, 0.75), 3)]
-        out["median_normalized"] = round(statistics.median(norms), 3)
-        out["normalized_iqr"] = [round(q(norms, 0.25), 3), round(q(norms, 0.75), 3)]
-        out["median_attainable"] = round(statistics.median(
-            [c["attainable"] for c in valid]), 3)
-        out["best_efficiency"] = effs[-1]
-        nk = sorted(c["normalized_kernel"] for c in valid if "normalized_kernel" in c)
-        if nk:
-            out["median_normalized_kernel"] = round(statistics.median(nk), 3)
-            out["normalized_kernel_iqr"] = [round(q(nk, 0.25), 3), round(q(nk, 0.75), 3)]
-            out["median_kernel_eff"] = round(statistics.median(
-                [c["kernel_eff"] for c in valid if "kernel_eff" in c]), 3)
-    return out
-
-
-def run_paired_scaling(sf_dir: str = "/root/testdata/sf0.1",
-                       sizes: tuple[int, int] = (160, 320),
-                       n_cores: int = 6,
-                       cycles: int = 5) -> dict:
-    """Interleaved-pairs protocol for the N-vs-4N criterion on a shared
-    host. Each cycle measures, back-to-back inside ONE host-noise window:
-
-      1. the attainable ceiling (6p vs 24p spinner burst — what the
-         hypervisor will actually deliver to this guest right now), then
-      2. the Spark job's marginal throughput at local[N] and local[4N]
-         (two input sizes each, fresh process per point).
-
-    Per-cycle output: raw Spark efficiency, same-window attainable
-    efficiency, and their ratio (``normalized`` — how much of the
-    host-attainable scaling the ENGINE achieves). The published headline is
-    the median over VALID cycles (noise-inverted timings are discarded, not
-    clamped). Rationale: the host's slack for 24-wide bursts swings
-    0.77-0.97 over tens of minutes (measured), and the all-points-then-
-    all-points protocol lets that swing land entirely on one side; pairing
-    inside a window cancels it to first order."""
-    base = _base_docs(sf_dir)
-    out: dict = {"sf_dir": sf_dir, "cycles": [],
-                 "method": f"interleaved pairs: per-cycle spinner ceiling + "
-                           f"local[{n_cores}]/local[{4*n_cores}] marginal "
-                           f"({base*sizes[0]} vs {base*sizes[1]} docs); "
-                           "median over valid cycles"}
-    for _ in range(cycles):
-        out["cycles"].append(one_paired_cycle(sf_dir, sizes, n_cores, base))
-    out.update(summarize_paired_cycles(out["cycles"]))
-    return out
-
-
-def _host_busy() -> bool:
-    """True when a dev workload owns the cores — the accumulation daemon
-    must not measure through it. Matches pytest, bench.py headline runs,
-    and ad-hoc driver scripts fed on stdin (`python -`, how interactive
-    verification runs appear). The daemon's own probe children
-    (`python -m …bench_scaling probe`) don't match these patterns."""
-    import subprocess
-
-    r = subprocess.run(["pgrep", "-f", r"pytest|bench\.py|python3? -$"],
-                       capture_output=True, text=True)
-    if r.stdout.strip():
-        return True
-    # ANY live JVM between cycles is a foreign Spark job: the daemon's own
-    # probe JVMs exist only inside a cycle, never when this guard runs, so
-    # a surviving java process means a dev driver (e.g. `python
-    # /tmp/whatever.py` holding a local[8] session — the round-6 r1 cycle
-    # this pattern-based guard missed) is using the cores. Grace re-check:
-    # a JUST-EXITED probe's JVM can outlive its parent by a few seconds
-    # (observed: the post-cycle check raced our own probe shutdown and
-    # stamped healthy cycles "dev workload appeared mid-cycle"), so only a
-    # JVM that survives the grace window counts as a foreign workload.
-    import time as _t
-
-    r = subprocess.run(["pgrep", "-x", "java"], capture_output=True, text=True)
-    if not r.stdout.strip():
-        return False
-    _t.sleep(8)
-    r = subprocess.run(["pgrep", "-x", "java"], capture_output=True, text=True)
-    return bool(r.stdout.strip())
-
-
-def run_paired_daemon(jsonl_path: str = "/root/repo/.scaling_cycles.jsonl",
-                      sf_dir: str = "/root/testdata/sf0.1",
-                      sizes: tuple[int, int] = (160, 320),
-                      n_cores: int = 6,
-                      max_cycles: int = 1000,
-                      jvms_every: int = 6) -> None:
-    """Accumulation mode: run paired cycles back-to-back for as long as the
-    round lasts, appending each cycle as one JSON line. Skips (sleeps)
-    while a dev workload is running so cycles aren't contaminated by our
-    own pytest/bench jobs; a busy-check is repeated AFTER each cycle and
-    the cycle flagged if the window was dirty. Every ``jvms_every``-th
-    measurement runs the 1-vs-4 pinned-worker-JVM mode instead (tagged
-    ``mode: jvms``) — the daemon's idle-only scheduling doubles as the
-    quiet-window selection that mode needs. Aggregate at publish time with
-    ``summarize_paired_cycles`` over the JSONL (jvms lines summarized
-    separately)."""
-    import json
-    import time as _t
-
-    def _publishable_r1(c: dict) -> bool:
-        """EXACTLY the predicate `summarize` applies when publishing the
-        r1 median (value present and plausible, 0 < v <= 2.0) — the
-        r1-priority scheduler must count what will actually publish, or an
-        implausible-but-unflagged reading ends r1 priority before 5
-        publish-grade readings exist (r6 ADVICE #5)."""
-        return (c.get("mode") == "jvms" and c.get("job") == "r1"
-                and not c.get("invalid")
-                and isinstance(c.get("value"), (int, float))
-                and 0.0 < c["value"] <= 2.0)
-
-    def _valid_r1_jobs() -> int:
-        """Count publish-grade r1-job jvms readings already banked in the
-        JSONL — the r1-priority scheduler (VERDICT r5 ask #3) keys off
-        this."""
-        n = 0
-        try:
-            with open(jsonl_path) as f:
-                for line in f:
-                    try:
-                        c = json.loads(line)
-                    except ValueError:
-                        continue
-                    if _publishable_r1(c):
-                        n += 1
-        except OSError:
-            pass
-        return n
-
-    base = _base_docs(sf_dir)
-    done = 0
-    consec_errors = 0
-    valid_r1 = _valid_r1_jobs()
-    while done < max_cycles:
-        if _host_busy():
-            _t.sleep(20)
-            continue
-        # the error path must stamp the mode of the attempt that FAILED
-        # (ADVICE r5 #1): an unstamped invalid line from a jvms attempt
-        # would land in the paired partition of `summarize` and inflate
-        # its n_cycles — the cross-partition contamination the mode split
-        # was meant to eliminate
-        mode_attempt = "paired"
-        try:
-            # r1-priority (VERDICT r5 ask #3): every r1-job daemon slot in
-            # round 5 landed in a contended window and was invalidated, so
-            # until ≥5 VALID r1 readings exist the jvms slot runs every
-            # other cycle and always runs the r1 job; after that, revert
-            # to every-``jvms_every``-th alternating fused/r1.
-            # jvms_every=0 still means "no jvms cycles at all" — the
-            # priority path must not override that contract.
-            r1_starved = bool(jvms_every) and valid_r1 < 5
-            is_jvms = (done % 2 == 1) if r1_starved else (
-                jvms_every and done % jvms_every == jvms_every - 1)
-            if is_jvms:
-                mode_attempt = "jvms"
-                job = "r1" if r1_starved else (
-                    "r1" if (done // jvms_every) % 2 else "fused")
-                s0, t0 = _steal_snapshot()
-                r = run_cluster_scaling(sf_dir=sf_dir, sizes=(160, 320), job=job)
-                s1, t1 = _steal_snapshot()
-                cyc = {"mode": "jvms", "job": job,
-                       "steal": round((s1 - s0) / max(t1 - t0, 1), 4),
-                       **{k: r[k] for k in ("value", "invalid", "workers_1",
-                                            "workers_4") if k in r}}
-            else:
-                cyc = one_paired_cycle(sf_dir, sizes, n_cores, base, scan=True)
-            consec_errors = 0
-        except Exception as e:  # noqa: BLE001 — ANY cycle failure (malformed
-            # worker JSON, /dev/shm pressure, KeyError) must log an invalid
-            # cycle and continue, not kill the accumulation daemon silently
-            # (ADVICE r4 #3); 5 consecutive failures = systemic, stop.
-            cyc = {"invalid": f"probe error: {type(e).__name__}: {e}"[:300]}
-            if mode_attempt == "jvms":
-                # a failed paired attempt stays mode-less (that IS the
-                # paired partition in `summarize`); a failed jvms attempt
-                # gets its real mode+job so it lands in the jvms partition
-                cyc["mode"] = "jvms"
-                cyc["job"] = job
-            consec_errors += 1
-            if consec_errors >= 5:
-                # write the 5th error's OWN diagnostic line before the stop
-                # marker (it may be a different error than the previous 4);
-                # mode="daemon" keeps the marker out of the paired/jvms
-                # partitions in `summarize`
-                with open(jsonl_path, "a") as f:
-                    f.write(json.dumps(cyc) + "\n")
-                    f.write(json.dumps({"mode": "daemon",
-                                        "invalid": "daemon stopped: 5 consecutive cycle errors"}) + "\n")
-                return
-            _t.sleep(30)
-        if _host_busy():
-            cyc["invalid"] = cyc.get("invalid") or "dev workload appeared mid-cycle"
-        if _publishable_r1(cyc):
-            valid_r1 += 1
-        with open(jsonl_path, "a") as f:
-            f.write(json.dumps(cyc) + "\n")
-        done += 1
-
-
-def run_cluster_scaling(sf_dir: str = "/root/testdata/sf0.1",
-                        sizes: tuple[int, ...] = (64, 160, 320),
-                        job: str = "fused") -> dict:
-    """The N vs 4N executor criterion, emulated honestly: 1 vs 4 SEPARATE
-    8-core-pinned worker JVMs (own GC / scheduler / Python daemons — what
-    cluster executors actually are) over disjoint slices of the same input.
-    Efficiency is measured on MARGINAL throughput — two input sizes per
-    configuration cancel the per-session fixed cost (codegen, planning,
-    daemon spinup), which a multi-hour 100 TB job amortizes to zero."""
-    import json
-    import shutil
-    import subprocess
-    import sys
-    import time as _t
-
-    have_taskset = shutil.which("taskset") is not None
-
-    def workers(n_workers: int, reps_total: int) -> tuple[float, int, float]:
-        shutil.rmtree("/dev/shm/kgslices", ignore_errors=True)
-        per = reps_total // n_workers
-        s0, st0 = _steal_snapshot()
-        t0 = _t.perf_counter()
-        procs = []
-        for w in range(n_workers):
-            cmd = [sys.executable, "-m", "ai_knowledge_graph_builder_spark.bench_scaling",
-                   "worker", "8", str(per), str(w * per), f"/dev/shm/kgslices/w{w}",
-                   sf_dir, job]
-            if have_taskset:
-                cmd = ["taskset", "-c", f"{w * 8}-{w * 8 + 7}"] + cmd
-            procs.append(subprocess.Popen(cmd, stdout=subprocess.PIPE,
-                                          stderr=subprocess.DEVNULL, text=True,
-                                          cwd="/root/repo"))
-        for p in procs:
-            p.wait()
-        sec = _t.perf_counter() - t0
-        s1, st1 = _steal_snapshot()
-        n_docs = reps_total * _base_docs(sf_dir)
-        return sec, n_docs, (s1 - s0) / max(st1 - st0, 1)
-
-    res: dict = {"sf_dir": sf_dir, "job": job,
-                 "method": "least-squares marginal throughput over sizes, 1 vs 4 pinned 8-core worker JVMs"}
-    for nw in (1, 4):
-        # min-of-2 per size (hypervisor-noise swings up to 50%), then a
-        # least-squares fit T = F + n/rate across all sizes — far more
-        # robust than a two-point difference, which a single noisy point
-        # can drive super-linear or negative.
-        pts = []
-        for reps in sizes:
-            t1, n, st1 = workers(nw, reps)
-            t2, _, st2 = workers(nw, reps)
-            # keep the faster try and ITS steal reading; a >5% steal burst
-            # on a kept point invalidates the whole run (the same rule the
-            # paired protocol applies — three contaminated manual runs this
-            # round produced physically impossible flat 1-worker slopes)
-            pts.append((n, min(t1, t2), st1 if t1 <= t2 else st2))
-        xs = [p[0] for p in pts]
-        ys = [p[1] for p in pts]
-        mx, my = sum(xs) / len(xs), sum(ys) / len(ys)
-        slope = sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / sum((x - mx) ** 2 for x in xs)
-        res[f"workers_{nw}"] = {
-            "points": [{"docs": x, "sec": round(y, 1), "steal": round(s, 4)}
-                       for x, y, s in pts],
-            "fixed_cost_s": round(my - slope * mx, 1),
-        }
-        if slope <= 0:
-            # noise-inverted timings: a clamped slope would publish an
-            # absurd marginal (same failure mode the paired protocol
-            # discards) — mark the run invalid instead
-            res["invalid"] = f"non-monotone timing at {nw} workers"
-            res["metric"] = "scaling_efficiency_N_to_4N"
-            res["unit"] = "ratio"
+        res[f"cores_{cpus}"] = {"points": pts}
+        fit = fit_rate([(p["docs"], p["sec"]) for p in pts])
+        if fit is None:
+            res["invalid"] = f"non-increasing timing at {cpus} cores"
             return res
-        if max(p[2] for p in pts) > 0.05:
-            res["invalid"] = f"steal burst at {nw} workers (>5%)"
-            res["metric"] = "scaling_efficiency_N_to_4N"
-            res["unit"] = "ratio"
-            return res
-        if res[f"workers_{nw}"]["fixed_cost_s"] < -2.0:
-            # a materially negative fitted intercept is physically
-            # implausible (per-session fixed cost is real and positive) —
-            # it means the LARGER point ran through a contention episode
-            # the steal counter missed (observed: 53.1 s → 112.8 s for 2×
-            # docs at 1.5-3.7% steal while a dev Spark job the busy-guard
-            # didn't match ran alongside). One-sided filter: it can only
-            # discard contended-low cycles, i.e. bias the surviving jvms
-            # median UP — disclosed in BENCH.md next to the values.
-            res["invalid"] = f"negative fixed cost at {nw} workers (contended window)"
-            res["metric"] = "scaling_efficiency_N_to_4N"
-            res["unit"] = "ratio"
-            return res
-        res[f"workers_{nw}"]["marginal_docs_per_sec"] = round(1.0 / slope, 1)
-    eff = res["workers_4"]["marginal_docs_per_sec"] / (4 * res["workers_1"]["marginal_docs_per_sec"])
-    res["metric"] = "scaling_efficiency_N_to_4N"
-    res["value"] = round(eff, 3)
-    res["unit"] = "ratio"
-    shutil.rmtree("/dev/shm/kgslices", ignore_errors=True)
+        fixed, rates[cpus] = fit
+        res[f"cores_{cpus}"].update(fixed_cost_s=round(fixed, 1),
+                                    marginal_docs_per_sec=round(rates[cpus], 1))
+    res["value"] = round(rates[4 * n] / (4 * rates[n]), 3)
     return res
 
 
 if __name__ == "__main__":
-    import sys as _sys
-
-    if len(_sys.argv) > 1 and _sys.argv[1] == "worker":
-        _worker_main(_sys.argv[2], int(_sys.argv[3]), int(_sys.argv[4]),
-                     _sys.argv[5], _sys.argv[6],
-                     _sys.argv[7] if len(_sys.argv) > 7 else "fused")
-    elif len(_sys.argv) > 1 and _sys.argv[1] == "jvms-r1":
-        import json as _json
-
-        print(_json.dumps(run_cluster_scaling(
-            sizes=(32, 96, 192), job="r1")))
-    elif len(_sys.argv) > 1 and _sys.argv[1] == "probe":
-        _probe_main(_sys.argv[2], int(_sys.argv[3]), _sys.argv[4],
-                    scan=(_sys.argv[5] if len(_sys.argv) > 5
-                          and _sys.argv[5] in ("scan", "ner") else False))
-    elif len(_sys.argv) > 1 and _sys.argv[1] == "daemon":
-        run_paired_daemon(*_sys.argv[2:3])
-    elif len(_sys.argv) > 1 and _sys.argv[1] == "summarize":
-        import json as _json
-        import statistics as _stats
-
-        with open(_sys.argv[2] if len(_sys.argv) > 2
-                  else "/root/repo/.scaling_cycles.jsonl") as _f:
-            _cycles = [_json.loads(line) for line in _f if line.strip()]
-        # partition by mode BEFORE summarizing (ADVICE r4 #5: jvms lines fed
-        # into the paired summarizer inflate n_cycles but can never be valid)
-        # paired cycles carry no "mode"; jvms and daemon-marker lines do
-        _paired = [c for c in _cycles if "mode" not in c]
-        _jvms = [c for c in _cycles if c.get("mode") == "jvms"]
-        _out = {"paired": summarize_paired_cycles(_paired)}
-        _ms = None
-        for _a in _sys.argv[3:]:
-            if _a.startswith("--max-steal="):
-                _ms = float(_a.split("=", 1)[1])
-                _out[f"paired_max_steal_{_ms}"] = summarize_paired_cycles(_paired, max_steal=_ms)
-        # a jvms cycle can carry BOTH a value and an "invalid" marker (the
-        # daemon stamps invalid AFTER the probe returns, e.g. "dev workload
-        # appeared mid-cycle") — invalid cycles must never enter the
-        # medians, same as summarize_paired_cycles drops them
-        _all_jv = [c["value"] for c in _jvms
-                   if "value" in c and "invalid" not in c]
-        _n_invalid_jv = sum(1 for c in _jvms if "value" in c and "invalid" in c)
-        _jv = [v for v in _all_jv if 0.0 < v <= 2.0]
-        _out["jvms"] = {"n_runs": len(_jvms), "n_valid": len(_jv),
-                        "n_dropped_invalid": _n_invalid_jv,
-                        "n_dropped_implausible": len(_all_jv) - len(_jv)}
-        if _jv:
-            _out["jvms"]["median"] = round(_stats.median(_jv), 3)
-            _out["jvms"]["values"] = sorted(round(v, 3) for v in _jv)
-        for _job in ("fused", "r1"):
-            _v = [c["value"] for c in _jvms
-                  if "value" in c and "invalid" not in c
-                  and 0.0 < c["value"] <= 2.0
-                  and c.get("job", "fused") == _job]
-            if _v:
-                _out["jvms"][f"{_job}_median"] = round(_stats.median(_v), 3)
-                _out["jvms"][f"{_job}_values"] = sorted(round(x, 3) for x in _v)
-        print(_json.dumps(_out, indent=2))
-    elif "--jvms" in _sys.argv:
-        import json as _json
-
-        print(_json.dumps(run_cluster_scaling()))
-    else:
-        import json as _json
-
-        print(_json.dumps(run_thread_scaling()))
+    if len(sys.argv) != 5 or sys.argv[1] != "probe":
+        sys.exit("usage: python -m ai_knowledge_graph_builder_spark.bench_scaling "
+                 "probe <cpus> <reps> <sf_dir>")
+    _probe_main(int(sys.argv[2]), int(sys.argv[3]), sys.argv[4])

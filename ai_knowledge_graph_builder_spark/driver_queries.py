@@ -22,7 +22,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from .cache import hold
+from .cache import hold, release
 from .functions.chunking import chunk_text
 from .functions.html import render_html
 from .operators.graph import (
@@ -281,12 +281,13 @@ def kg_fuzzy_linking(spark: SparkSession, sf_dir: str) -> DataFrame:
     registry = flagship_registry_df(spark)
     aliases = build_alias_table(registry)
     resolved, _ext_nodes = resolve_mentions(mraw, aliases)
-    return resolved.groupBy(F.col("text").alias("mention_text")).agg(
+    out = resolved.groupBy(F.col("text").alias("mention_text")).agg(
         F.max("resolved_id").alias("resolved_id"),
         F.max("resolution_method").alias("resolution_method"),
         F.round(F.max("confidence"), 4).alias("confidence"),
         F.count(F.lit(1)).alias("n_mentions"),
     )
+    return hold(out, resolved)
 
 
 # The expected (mutation → id, score) rows below are derived from the PURE
@@ -336,9 +337,10 @@ def kg_external_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     ExternalEntity ids with first-doc attribution by (url, mention_idx)
     arrival order (entity_extractor.py:196-263, 283-308)."""
     gaz = flagship_gazetteer() + [(w, "ORG") for w in EXTERNAL_GAZ_WORDS]
-    ext = flagship_mentions(spark, sf_dir, gaz).filter(F.col("resolution_type") == "external")
-    return (
-        ext.groupBy(F.col("resolved_id").alias("entity_id"))
+    mentions = flagship_mentions(spark, sf_dir, gaz)
+    out = (
+        mentions.filter(F.col("resolution_type") == "external")
+        .groupBy(F.col("resolved_id").alias("entity_id"))
         .agg(
             F.min(F.lower(F.trim("text"))).alias("name"),
             F.count(F.lit(1)).alias("n_mentions"),
@@ -349,6 +351,7 @@ def kg_external_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_replace("first_url", "doc://", "").cast("long").alias("first_doc_id"),
         )
     )
+    return hold(out, mentions)
 
 
 KG_EXTERNAL_ENTITIES_SQL = """
@@ -413,7 +416,7 @@ def kg_orphan_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(document_nodes(documents))
     )
     edges = mention_edges(mentions)
-    return orphan_nodes(nodes, edges)
+    return hold(orphan_nodes(nodes, edges), mentions)
 
 
 def _flagship_alias_values() -> str:
@@ -494,7 +497,7 @@ WHERE predicate IS NOT NULL
 def kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 exact-linking shape: distinct (doc, entity) gazetteer resolutions."""
     mentions = flagship_mentions(spark, sf_dir)
-    return (
+    out = (
         mentions.filter(F.col("resolution_type") == "canonical")
         .select(
             F.regexp_replace("url", "doc://", "").cast("long").alias("doc_id"),
@@ -502,6 +505,7 @@ def kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
+    return hold(out, mentions)
 
 
 KG_MENTIONS_SQL = f"""
@@ -524,13 +528,14 @@ def kg_mention_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     mentions = flagship_mentions(spark, sf_dir)
     edges = mention_edges(mentions)
-    return edges.select(
+    out = edges.select(
         F.regexp_replace("src", "doc://", "").cast("long").alias("doc_id"),
         F.col("dst").alias("entity_id"),
         F.col("props")["mention_text"].alias("mention_text"),
         F.col("props")["position"].cast("long").alias("position"),
         F.round("confidence", 4).alias("confidence"),
     )
+    return hold(out, mentions)
 
 
 KG_MENTION_EDGES_SQL = f"""
@@ -672,12 +677,13 @@ def kg_triple_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(s_edges.select(*cols))
     )
     s = triple_summary(edges)
-    return s.select(
+    out = s.select(
         F.col("total").cast("long").alias("total"),
         F.col("ground_truth").cast("long").alias("ground_truth"),
         F.col("inferred").cast("long").alias("inferred"),
         F.col("flagged").cast("long").alias("flagged"),
     )
+    return hold(out, mentions)
 
 
 KG_METADATA_MENTIONS_SQL = f"""
@@ -703,10 +709,11 @@ def kg_one_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = registry_nodes(registry)
     ids = registry.select(F.col("entity_id").alias("id"))
     hop = one_hop_context(inferred, nodes, ids, k=2)
-    return hop.select(
+    out = hop.select(
         "src", "src_name", "predicate", "dst", "dst_name",
         F.round("confidence", 4).alias("confidence"),
     )
+    return hold(out, mentions)
 
 
 def _flagship_name_values() -> str:
@@ -749,11 +756,12 @@ FROM counts
 def _flagship_assembled_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inferred flagship edges through the REAL assemble_triples operator
     (J8 ×2 node join + P4 predicate exclusion + P5 natural text + D3 dedup)
-    against the registry node dimension."""
+    against the registry node dimension. The result holds linking's
+    caches."""
     mentions = flagship_mentions(spark, sf_dir)
     registry = flagship_registry_df(spark)
     inferred = infer_edges(cooccurrence_pairs(mentions), _empty_edges(spark))
-    return assemble_triples(inferred, registry_nodes(registry))
+    return hold(assemble_triples(inferred, registry_nodes(registry)), mentions)
 
 
 #: (label, subject substring, predicate) for the J9 point lookups — chosen so
@@ -778,10 +786,11 @@ def kg_basic_facts(spark: SparkSession, sf_dir: str) -> DataFrame:
     for label, subj, pred in BASIC_FACT_LOOKUPS:
         hit = basic_fact_lookup(t, subj, pred).withColumn("query_label", F.lit(label))
         out = hit if out is None else out.unionByName(hit)
-    return out.select(
+    out = out.select(
         "query_label", "subject_name", "predicate", "object_name",
         F.round("confidence", 4).alias("confidence"),
     )
+    return hold(out, t)
 
 
 def _basic_facts_sql() -> str:
@@ -816,10 +825,11 @@ def kg_structured_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _flagship_assembled_triples(spark, sf_dir).persist()
     t.count()
     st = structured_triple_text(t)
-    return st.join(
+    out = st.join(
         t.select("subject_id", "predicate", "object_id", F.col("text").alias("natural_text")),
         ["subject_id", "predicate", "object_id"],
     ).select("subject_id", "predicate", "object_id", "structured_text", "natural_text")
+    return hold(out, t)
 
 
 def _structured_triples_sql() -> str:
@@ -924,7 +934,7 @@ def kg_source_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.format_string("doc://%08d", "doc_id").alias("url")
     )
     manifest = source_manifest(triples, chunks)
-    return manifest.select("file", "used_in_triples", "used_in_chunks")
+    return hold(manifest.select("file", "used_in_triples", "used_in_chunks"), mentions)
 
 
 def _source_manifest_sql() -> str:
@@ -997,12 +1007,13 @@ def kg_chunk_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     items = chunks.filter(F.col("chunk_id") != 0)
     topk = cosine_topk_join(items, query, k=10, item_id="chunk_id", query_id="query_id")
-    return topk.select(
+    out = topk.select(
         F.floor(F.col("chunk_id") / 10_000).cast("long").alias("doc_id"),
         (F.col("chunk_id") % 10_000).cast("long").alias("chunk_index"),
         F.round("score", 4).alias("score"),
         F.col("rank").cast("long").alias("rank"),
     )
+    return hold(out, chunks)
 
 
 # The oracle recomputes the md5-BoW kernel bit-for-bit: token vector dim d is
@@ -1801,11 +1812,12 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tie-consistent 4dp: floor(x·1e4 + 0.5) is the same IEEE arithmetic in
     # both engines even when the integer-ratio jaccard lands on a .xxxx5
     # tie (engine ROUND implementations disagree there — see quality_score)
-    return pairs.select(
+    out = pairs.select(
         F.col("a").cast("long").alias("a"),
         F.col("b").cast("long").alias("b"),
         (F.floor(F.col("jaccard") * 10000 + F.lit(0.5)) / 10000.0).alias("jaccard"),
     )
+    return hold(out, pairs)
 
 
 MINHASH_PAIRS_SQL = """
@@ -2075,7 +2087,7 @@ def kg_canonical_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("node_type"),
     )
     remap = cluster_external_entities(nodes, emb, tau=0.85, bands=16, rows_per_band=8)
-    return remap.select("id", "canonical_id")
+    return hold(remap.select("id", "canonical_id"), remap)
 
 
 # The oracle recomputes lsh_signatures' md5 hyperplanes exactly: plane p,
@@ -2453,6 +2465,7 @@ def kg_lineage_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             if r["max_key"] is not None:
                 cur[2] = r["max_key"] if cur[2] is None else max(cur[2], r["max_key"])
     finally:
+        release(t)
         shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         [(p, n, mn, mx) for p, (n, mn, mx) in sorted(agg.items())],
@@ -2648,9 +2661,9 @@ def kg_stage_manifests(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk_emb = docs.select("doc_id", "text").mapInPandas(
         _embed, "key string, embedding array<double>"
     )
-    mentions = kg_mention_edges(spark, sf_dir).withColumn(
-        "key", F.col("entity_id")
-    )
+    edges = kg_mention_edges(spark, sf_dir)
+    # run_stage releases the caches held by what it writes
+    mentions = hold(edges.withColumn("key", F.col("entity_id")), edges)
 
     tmp = tempfile.mkdtemp(prefix="kg-stages-")
     try:
@@ -2819,11 +2832,12 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("string").alias("doc_id"), "text"
     )
     pairs = ngram_jaccard_pairs(both, "doc_id", "text", tau=0.4, n=2)
-    return pairs.select(
+    out = pairs.select(
         F.col("a").cast("long").alias("a"),
         F.col("b").cast("long").alias("b"),
         (F.floor(F.col("jaccard") * 10000 + F.lit(0.5)) / 10000.0).alias("jaccard"),
     )
+    return hold(out, pairs)
 
 
 NGRAM_JACCARD_SQL = """

@@ -235,12 +235,24 @@ def answer_golden_queries(
     oriented — no per-question graph round trips, unlike
     rag_system.py:323-393). ``nodes`` is required for the temporal /
     aggregative / comparative-department shapes (node-property questions)."""
-    import time as _time
-
     # ground-truth edges only (confidence == 1.0) mirror the CSV derivation
     gt = triples.filter(F.col("confidence") == 1.0).select(
         "subject_name", "predicate", "object_name"
     ).persist()
+    try:
+        return _answer_golden(spark, golden, triples, gt, nodes)
+    finally:
+        gt.unpersist()
+
+
+def _answer_golden(
+    spark: SparkSession,
+    golden: pd.DataFrame,
+    triples: DataFrame,
+    gt: DataFrame,
+    nodes: DataFrame | None,
+) -> pd.DataFrame:
+    import time as _time
 
     answers: dict[str, list[str]] = {}
     # per-question amortized latency (ms): each set-oriented pass's wall time

@@ -114,18 +114,7 @@ def get_spark(
         # managed-table warehouse outside the repo (bucketed graph tables)
         .config("spark.sql.warehouse.dir", os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/kg-spark-warehouse"))
     )
-    # optional JVM flags (e.g. GC choice) for A/B runs: the local-mode JVM
-    # is forked at getOrCreate, so driver extraJavaOptions apply cleanly.
-    # Env opts MERGE with (and precede) any caller-passed extraJavaOptions —
-    # the scaling worker/probe JVMs pass their own flags via extra_conf and
-    # must not silently discard the env-provided A/B flags; caller flags come
-    # last so they win on a per-flag conflict (JVM last-one-wins).
     conf = {**python_worker_conf(master), **(extra_conf or {})}
-    java_opts = os.environ.get("SPARK_GRAFT_JAVA_OPTS")
-    if java_opts:
-        caller_opts = conf.pop("spark.driver.extraJavaOptions", "")
-        merged = f"{java_opts} {caller_opts}".strip()
-        b = b.config("spark.driver.extraJavaOptions", merged)
     for k, v in conf.items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -5,17 +5,16 @@ local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
 Timing uses the noop datasource sink so the full plan (including projections
 a count() would prune) executes without write overhead.
 
---scaling emulates N vs 4N executors as 1 vs 4 separate pinned 8-core
-worker JVMs over disjoint slices of the same input, and reports
-least-squares marginal throughput + scaling efficiency (the sandbox
-stand-in for the BASELINE.json two-cluster-size criterion; see BENCH.md).
+--scaling runs the same KG job at local[N] and local[4N] (N = nproc // 4)
+and reports least-squares marginal throughput and the N-to-4N scaling
+efficiency (bench_scaling.py). --linking-modes times broadcast against
+shuffle linking on an open-vocabulary corpus.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 from pathlib import Path
@@ -120,51 +119,10 @@ def _one_window(spark, sf_dir: str) -> dict:
             "probe_s": round(max(probe0, probe1), 3)}
 
 
-def _stop_accumulation_daemon() -> bool:
-    """Kill any running scaling-accumulation daemon (and its probe
-    children) before an official measurement. Round 4's committed headline
-    was contaminated by the daemon's own in-flight cycle racing the bench
-    (its busy-guard only pauses BETWEEN cycles), so the protection is now
-    structural: whoever runs bench.py gets a quiet host, no manual
-    discipline required. Returns True if anything was stopped."""
-    import signal
-
-    me = os.getpid()
-    stopped = False
-    for pid_dir in os.listdir("/proc"):
-        if not pid_dir.isdigit() or int(pid_dir) == me:
-            continue
-        try:
-            with open(f"/proc/{pid_dir}/cmdline", "rb") as f:
-                argv = f.read().split(b"\0")
-        except OSError:
-            continue
-        # match the EXACT spawn shapes (python -m ...bench_scaling <cmd> /
-        # python .../bench_scaling.py <cmd>), not a substring of the full
-        # command line — pgrep -f would also match an interactive shell
-        # whose history/snapshot happens to contain the words and kill it
-        argv = [a.decode("utf-8", "replace") for a in argv if a]
-        if len(argv) < 3 or "python" not in os.path.basename(argv[0]):
-            continue
-        is_mod = argv[1] == "-m" and argv[2].endswith(".bench_scaling")
-        is_script = argv[1].endswith("bench_scaling.py")
-        cmd = argv[3] if is_mod else argv[2] if is_script else None
-        if cmd in ("daemon", "worker", "probe", "jvms-r1"):
-            try:
-                os.kill(int(pid_dir), signal.SIGTERM)
-                stopped = True
-            except OSError:
-                pass
-    if stopped:
-        time.sleep(10)  # let probe JVMs exit and load drain a little
-    return stopped
-
-
 def run_bench() -> dict:
     from ai_knowledge_graph_builder_spark.driver_queries import QUERIES
     from ai_knowledge_graph_builder_spark.session import get_spark
 
-    daemon_stopped = _stop_accumulation_daemon()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark("kg-bench", master=f"local[{cpus}]")
@@ -251,28 +209,18 @@ def run_bench() -> dict:
         "docs_per_sec": round(n_docs / kg_sec, 1),
         "triples_per_sec": round(n_triples / kg_sec, 2),
         "cpus": int(cpus),
-        "daemon_stopped": daemon_stopped,
+        # no background process left to stop; the key stays for output
+        # compatibility
+        "daemon_stopped": False,
     }
 
 
-def run_scaling(jvms: bool = False) -> dict:
-    """N vs 4N parallelism on the same job + input. Default mode: local[8]
-    vs local[32] (the round brief's sanctioned sandbox form) with steal-
-    guarded min-of-3 points; ``--jvms`` switches to the stricter 1-vs-4
-    pinned 8-core worker JVM emulation. Both report least-squares marginal
-    throughput. See bench_scaling.py + BENCH.md."""
-    from ai_knowledge_graph_builder_spark.bench_scaling import (
-        run_cluster_scaling,
-        run_thread_scaling,
-    )
+def run_scaling() -> dict:
+    """N vs 4N parallelism on the same job and input: local[N] vs
+    local[4N], N = nproc // 4 (see bench_scaling.py)."""
+    from ai_knowledge_graph_builder_spark.bench_scaling import run_thread_scaling
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if jvms:
-        return run_cluster_scaling(sf_dir=sf_dir)
-    if "--paired" in sys.argv:
-        from ai_knowledge_graph_builder_spark.bench_scaling import run_paired_scaling
-
-        return run_paired_scaling(sf_dir=sf_dir)
     return run_thread_scaling(sf_dir=sf_dir)
 
 
@@ -284,7 +232,6 @@ def run_linking_modes() -> dict:
     forces the fallback). Reports both modes' resolve_mentions wall time
     over the SAME persisted mention relation, plus the plan-shape proof
     that the shuffle mode actually engaged."""
-    _stop_accumulation_daemon()
     from ai_knowledge_graph_builder_spark.operators.extraction import extract_documents
     from ai_knowledge_graph_builder_spark.operators.linking import (
         build_alias_table,
@@ -353,30 +300,6 @@ def run_linking_modes() -> dict:
     }
 
 
-def run_kg_only() -> dict:
-    from ai_knowledge_graph_builder_spark.driver_queries import QUERIES
-    from ai_knowledge_graph_builder_spark.session import get_spark
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark("kg-bench-scaling", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(f"{sf_dir}/documents.parquet").count()  # warm up
-    # two timed runs, keep the faster (JIT/page-cache stabilization)
-    secs = min(
-        _time_query(spark, QUERIES["kg_inferred_triples"], sf_dir) for _ in range(2)
-    )
-    n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    return {
-        "metric": "kg_pipeline_sec",
-        "value": round(secs, 3),
-        "unit": "sec",
-        "sf": sf_dir,
-        "docs_per_sec": round(n_docs / secs, 1),
-        "cpus": int(cpus),
-    }
-
-
 def sync_bench_md(result: dict) -> None:
     """Rewrite the marker-delimited headline block in BENCH.md from the
     freshly measured result so the doc can never drift from the artifact
@@ -411,11 +334,9 @@ def sync_bench_md(result: dict) -> None:
 
 if __name__ == "__main__":
     if "--scaling" in sys.argv:
-        print(json.dumps(run_scaling(jvms="--jvms" in sys.argv)))
+        print(json.dumps(run_scaling()))
     elif "--linking-modes" in sys.argv:
         print(json.dumps(run_linking_modes()))
-    elif "--kg-only" in sys.argv:
-        print(json.dumps(run_kg_only()))
     else:
         result = run_bench()
         sync_bench_md(result)

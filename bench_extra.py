@@ -25,7 +25,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from bench import HEADLINE, _spin_probe, _stop_accumulation_daemon
+from bench import HEADLINE, _spin_probe
 
 
 def main() -> None:
@@ -48,7 +48,6 @@ def main() -> None:
     tag = _opt("--explain-tag")
     names = (_opt("--queries") or ",".join(HEADLINE)).split(",")
 
-    _stop_accumulation_daemon()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark("kg-bench-extra", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")

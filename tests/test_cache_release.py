@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from ai_knowledge_graph_builder_spark.cache import release
-from ai_knowledge_graph_builder_spark.driver_queries import kg_inferred_triples
+from ai_knowledge_graph_builder_spark.driver_queries import QUERIES, kg_inferred_triples
 from ai_knowledge_graph_builder_spark.plans.pipeline import (
     run_kg_pipeline,
     run_kg_pipeline_checkpointed,
@@ -60,4 +60,22 @@ def test_run_kg_pipeline_release(spark, tables):
     assert out["triples"].count() > 0
     assert _persisted(spark) > before
     release(out["mentions"])
+    assert _persisted(spark) <= before
+
+
+@pytest.mark.parametrize("name", [
+    "kg_mentions", "kg_mention_edges", "kg_external_entities", "kg_orphan_counts",
+    "kg_fuzzy_linking", "kg_triple_summary", "kg_one_hop", "kg_basic_facts",
+    "kg_structured_triples", "kg_source_manifest", "kg_chunk_retrieval",
+    "minhash_pairs", "ngram_jaccard", "kg_canonical_clusters", "kg_lineage_manifest",
+    "kg_stage_manifests", "kg_golden_scores",
+])
+def test_driver_query_release(spark, name):
+    """Each driver query's result holds whatever it cached; the queries
+    that return driver-built rows (golden scores, the lineage and stage
+    manifests) keep no cache at all."""
+    before = _persisted(spark)
+    result = QUERIES[name](spark, SF_DIR)
+    assert result.count() > 0
+    release(result)
     assert _persisted(spark) <= before

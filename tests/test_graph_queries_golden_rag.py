@@ -139,9 +139,9 @@ def test_golden_queries_perfect_accuracy(spark, kg, corpus):
         answered[answered["latency_ms"] <= 0][["qid", "qtype"]].head()
     rep = golden_latency_report(answered)
     assert set(rep["category"]) == set(scores)
-    # The budget comparison itself is wall-clock and load-sensitive (the
-    # scaling-accumulation daemon's in-flight cycle can overlap a fresh
-    # pytest — ADVICE r4 #1), so by default it is REPORT-ONLY: violations
+    # The budget comparison itself is wall-clock and load-sensitive (any
+    # other job on the host can overlap a fresh pytest — ADVICE r4 #1),
+    # so by default it is REPORT-ONLY: violations
     # print but don't fail. Set SPARK_GRAFT_ENFORCE_LATENCY_BUDGETS=1 for
     # the hard gate on a known-idle host (bench runs do).
     over = rep[~rep["under_budget"]]
