@@ -89,21 +89,22 @@ def _guarded_run(fn, max_tries: int = 5, steal_budget: float = 0.02,
     """Run ``fn()`` (returns elapsed seconds); if hypervisor steal during the
     run exceeded ``steal_budget`` of total ticks, the measurement is
     contaminated — back off (noise arrives in waves from neighbor VMs) and
-    retry up to ``max_tries``, then keep the best anyway. The steal fraction
-    is recorded alongside every published point so a dirty point is visible,
-    never silent."""
-    best, best_steal = None, None
+    retry up to ``max_tries``, then keep the best anyway. Any clean try
+    beats every dirty one, so a fast dirty try is never published while a
+    clean one exists. The steal fraction is recorded alongside every
+    published point so a dirty point is visible, never silent."""
+    best = None  # (dirty, sec, steal_frac)
     for i in range(max_tries):
         s0, t0 = _steal_snapshot()
         sec = fn()
         s1, t1 = _steal_snapshot()
         frac = (s1 - s0) / max(t1 - t0, 1)
-        if best is None or sec < best:
-            best, best_steal = sec, frac
-        if frac <= steal_budget and i >= 2:  # at least three tries (min-of-3)
-            return best, best_steal
+        if best is None or (frac > steal_budget, sec, frac) < best:
+            best = (frac > steal_budget, sec, frac)
+        if not best[0] and i >= 2:  # at least three tries (min-of-3)
+            break
         time.sleep(backoff_s if frac > steal_budget else 0)
-    return best, best_steal
+    return best[1], best[2]
 
 
 def fit_rate(points: list[tuple[float, float]]) -> tuple[float, float] | None:

@@ -1778,21 +1778,16 @@ ORACLES = {
 # ---------------------------------------------------------------------------
 # MinHash-LSH near-duplicate detection (training-data dedup; D-family)
 # ---------------------------------------------------------------------------
-def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs among docs (doc_id < 100) unioned with planted
-    mutations (first word dropped, id + 100000): shingle → md5 minhash →
-    band → bucket join → exact-Jaccard verify >= 0.5. The mutation is
-    synthesized identically in the SQL oracle, so the full LSH dataflow is
-    value-checked end-to-end."""
-    from .operators.dedup import minhash_dedup_pairs
-
+def _planted_near_dup_pairs(spark: SparkSession, sf_dir: str, find_pairs) -> DataFrame:
+    """(a, b, jaccard) from ``find_pairs`` over docs (doc_id < 100) unioned
+    with planted mutations (first word dropped, id + 100000), as a
+    (doc_id string, text) relation. Both variants come from ONE scan via an
+    in-row explode; the SQL oracles synthesize the mutation identically."""
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") < 100)
         .select(F.col("doc_id").cast("long").alias("doc_id"), F.trim("text").alias("text"))
     )
-    # original + mutated variants from ONE scan via an in-row explode (the
-    # unionAll form planned two parquet scans of the same file)
     words = F.split(F.col("text"), r"\s+")
     variants = F.array(
         F.struct(F.col("doc_id").alias("doc_id"), F.col("text").alias("text")),
@@ -1804,11 +1799,7 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     both = docs.select(F.explode(variants).alias("v")).select(
         F.col("v.doc_id").cast("string").alias("doc_id"), F.col("v.text").alias("text")
     )
-    # spread the one-split test scan before the in-row shingle/minhash
-    # projections (16 md5 passes per doc would otherwise run on one core;
-    # gated — see _spread)
-    both = _spread(both)
-    pairs = minhash_dedup_pairs(both, "doc_id", "text", tau=0.5, num_hashes=16, bands=4)
+    pairs = find_pairs(both)
     # tie-consistent 4dp: floor(x·1e4 + 0.5) is the same IEEE arithmetic in
     # both engines even when the integer-ratio jaccard lands on a .xxxx5
     # tie (engine ROUND implementations disagree there — see quality_score)
@@ -1818,6 +1809,20 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.floor(F.col("jaccard") * 10000 + F.lit(0.5)) / 10000.0).alias("jaccard"),
     )
     return hold(out, pairs)
+
+
+def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup pairs among the planted-mutation docs: shingle → md5
+    minhash → band → bucket join → exact-Jaccard verify >= 0.5. The
+    mutation is synthesized identically in the SQL oracle, so the full LSH
+    dataflow is value-checked end-to-end."""
+    from .operators.dedup import minhash_dedup_pairs
+
+    # spread the one-split test scan before the in-row shingle/minhash
+    # projections (16 md5 passes per doc would otherwise run on one core;
+    # gated — see _spread)
+    return _planted_near_dup_pairs(spark, sf_dir, lambda both: minhash_dedup_pairs(
+        _spread(both), "doc_id", "text", tau=0.5, num_hashes=16, bands=4))
 
 
 MINHASH_PAIRS_SQL = """
@@ -2810,34 +2815,16 @@ ORACLES["ann_ivf"] = ANN_IVF_SQL
 # Exact n-gram Jaccard near-dup (the lossless counterpart of minhash_pairs)
 # ---------------------------------------------------------------------------
 def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact bigram-Jaccard near-dup pairs over docs (doc_id < 100) unioned
-    with planted mutations (first word dropped, id + 100000): shingle →
-    inverted-index equi-join (recall 1.0 — no banding) → exact-Jaccard
-    verify >= 0.4. Bigrams + the lower threshold distinguish this row from
-    minhash_pairs (trigrams, LSH candidates, 0.5); together they value-check
-    both candidate-generation regimes over the same jaccard_verify kernel."""
+    """Exact bigram-Jaccard near-dup pairs among the planted-mutation docs:
+    shingle → inverted-index equi-join (recall 1.0 — no banding) →
+    exact-Jaccard verify >= 0.4. Bigrams + the lower threshold distinguish
+    this row from minhash_pairs (trigrams, LSH candidates, 0.5); together
+    they value-check both candidate generators over the same shingle-array
+    verify."""
     from .operators.dedup import ngram_jaccard_pairs
 
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .filter(F.col("doc_id") < 100)
-        .select(F.col("doc_id").cast("long").alias("doc_id"), F.trim("text").alias("text"))
-    )
-    words = F.split(F.col("text"), r"\s+")
-    mutated = docs.select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.concat_ws(" ", F.slice(words, 2, 1000000)).alias("text"),
-    )
-    both = docs.unionAll(mutated).select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
-    pairs = ngram_jaccard_pairs(both, "doc_id", "text", tau=0.4, n=2)
-    out = pairs.select(
-        F.col("a").cast("long").alias("a"),
-        F.col("b").cast("long").alias("b"),
-        (F.floor(F.col("jaccard") * 10000 + F.lit(0.5)) / 10000.0).alias("jaccard"),
-    )
-    return hold(out, pairs)
+    return _planted_near_dup_pairs(spark, sf_dir, lambda both: ngram_jaccard_pairs(
+        both, "doc_id", "text", tau=0.4, n=2))
 
 
 NGRAM_JACCARD_SQL = """

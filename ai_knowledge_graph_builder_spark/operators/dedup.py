@@ -2,16 +2,14 @@
 Jaccard; SimHash lives in driver_queries as a portable query, embedding
 near-dup is operators/similarity.lsh_cosine_join).
 
-All hashing is md5-based (portable across Spark/DuckDB/Python) and all
-shingling is token-trigram, computed JVM-side with higher-order functions —
-no Python in the hot path.
-
-Scale notes: the MinHash pipeline computes all k per-doc minhashes as k
-min-aggregates of ONE partial/final groupBy(id) (map-side combine; no seed
-explosion, so shuffle volume is one row per doc, not k rows per shingle),
-derives band signatures by pure projection over the wide signature row, and
-the candidate join keys on (band, sig) — bounded buckets, AQE-skew-safe.
-Only candidate pairs pay the exact-Jaccard verification join.
+One array kernel serves both near-dup paths. ``shingle_arrays`` splits each
+text once and keeps its distinct token n-grams as an in-row array. A
+candidate generator proposes (a, b) pairs: LSH bands over in-row md5
+minhashes, or the lossless shared-shingle self-join. ``_verified_pairs``
+then scores every candidate by ``array_intersect`` over the two arrays, so
+only candidate pairs pay verification. All hashing is md5-based (portable
+across Spark/DuckDB/Python) and everything runs JVM-side with higher-order
+functions — no Python in the hot path.
 """
 
 from __future__ import annotations
@@ -31,11 +29,12 @@ def exact_dedup_ids(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _shingle_array_expr(text_col: str, n: int):
-    """The token n-gram array of one text column — the ONE definition of a
-    shingle, shared by the array-native and exploded-relation shapes (and
-    mirrored by the DuckDB oracle)."""
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+def _shingle_array_expr(words_col: str, n: int):
+    """The token n-gram array over an already-split words column — the ONE
+    definition of a shingle (mirrored by the DuckDB oracles). The lambda
+    reads only the words column and its index: a split inside it would run
+    again for every element, O(words²) per text."""
+    words = F.col(words_col)
     idxs = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
     return F.when(
         F.size(words) >= n,
@@ -76,13 +75,14 @@ def ngram_jaccard_pairs(
     there (or bound df with a stop-shingle cutoff) and use this as the
     verifier on samples.
 
-    Caching contract: the shingle relation is persisted because the
-    returned lazy plan consumes it twice (candidate join + exact verify).
-    The persisted handle rides on the result (``cache.hold``) — call
-    ``dedup.release(result)`` after materializing to unpersist
-    deterministically (``spark.catalog.clearCache()`` also works; bench.py
-    clears between tries)."""
-    sh = token_shingles(df, id_col, text_col, n).persist()
+    Caching contract: the shingle arrays are persisted because the returned
+    lazy plan reads them three times (the exploded candidate join, then
+    both sides of the verify). The persisted handle rides on the result
+    (``cache.hold``) — call ``dedup.release(result)`` after materializing
+    to unpersist deterministically (``spark.catalog.clearCache()`` also
+    works; bench.py clears between tries)."""
+    base = shingle_arrays(df, id_col, text_col, n).persist()
+    sh = base.select("id", F.explode("sh").alias("shingle"))
     cand = (
         sh.select(F.col("id").alias("a"), "shingle")
         .join(sh.select(F.col("id").alias("b"), "shingle"), "shingle")
@@ -90,24 +90,7 @@ def ngram_jaccard_pairs(
         .select("a", "b")
         .distinct()
     )
-    out = jaccard_verify(cand, sh).filter(F.col("jaccard") >= tau)
-    return hold(out, sh)
-
-
-def minhash_signatures(shingles: DataFrame, num_hashes: int = 16) -> DataFrame:
-    """(id, h0..h{k-1}): md5-string min per seed — a valid min-wise hash
-    family under lexicographic order, portable to any engine with md5.
-
-    All k mins are computed as k aggregates of ONE partial/final
-    ``groupBy(id)`` — no seed explosion: the previous long-format shape
-    (explode ×k → groupBy(id, seed)) shuffled k rows per (doc, shingle)
-    where this shuffles one partially-aggregated row per doc, a k× shuffle
-    volume reduction that compounds at corpus scale."""
-    mins = [
-        F.min(_seed_md5(i, F.col("shingle"))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    return shingles.groupBy("id").agg(*mins)
+    return hold(_verified_pairs(cand, base, tau), base)
 
 
 def lsh_candidate_pairs(signatures: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
@@ -134,35 +117,33 @@ def lsh_candidate_pairs(signatures: DataFrame, bands: int, rows_per_band: int) -
     return a.join(b, ["band", "band_sig"]).filter(F.col("a") < F.col("b")).select("a", "b").distinct()
 
 
-def jaccard_verify(candidates: DataFrame, shingles: DataFrame) -> DataFrame:
-    """Exact token-trigram Jaccard per candidate pair."""
-    sizes = shingles.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    common = (
-        candidates.join(shingles.select(F.col("id").alias("a"), "shingle"), "a")
-        .join(shingles.select(F.col("id").alias("b"), "shingle"), ["b", "shingle"])
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("common"))
+def _verified_pairs(cand: DataFrame, base: DataFrame, tau: float) -> DataFrame:
+    """(a, b, jaccard) for each candidate pair whose exact Jaccard is >= tau:
+    |sh_a ∩ sh_b| / (|sh_a| + |sh_b| − |sh_a ∩ sh_b|) over the two rows'
+    distinct shingle arrays in ``base`` (id, sh) — the one verify both
+    candidate generators share."""
+    j = (
+        cand.join(base.select(F.col("id").alias("a"), F.col("sh").alias("sh_a")), "a")
+        .join(base.select(F.col("id").alias("b"), F.col("sh").alias("sh_b")), "b")
     )
-    return (
-        common.join(sizes.select(F.col("id").alias("a"), F.col("n").alias("na")), "a")
-        .join(sizes.select(F.col("id").alias("b"), F.col("n").alias("nb")), "b")
-        .select(
-            "a",
-            "b",
-            (F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))).alias("jaccard"),
-        )
+    jm = j.select(
+        "a",
+        "b",
+        F.size(F.array_intersect("sh_a", "sh_b")).cast("long").alias("common"),
+        F.size("sh_a").cast("long").alias("na"),
+        F.size("sh_b").cast("long").alias("nb"),
     )
+    jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
+    return jm.select("a", "b", jac.alias("jaccard")).filter(F.col("jaccard") >= tau)
 
 
 def shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """(id, sh): the DISTINCT token n-gram set of each row as an in-row
     array (``_shingle_array_expr`` + ``array_distinct``) — dedup is a
-    per-id property, so no row ever needs to leave its task for it (the
-    exploded-relation + global DISTINCT form paid a whole shuffle)."""
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(_shingle_array_expr(text_col, n)).alias("sh"),
-    )
+    per-id property, so no row ever needs to leave its task for it. The
+    split runs once per row, in its own projection."""
+    words = df.select(F.col(id_col).alias("id"), F.split(F.trim(F.col(text_col)), r"\s+").alias("w"))
+    return words.select("id", F.array_distinct(_shingle_array_expr("w", n)).alias("sh"))
 
 
 def minhash_dedup_pairs(
@@ -180,11 +161,10 @@ def minhash_dedup_pairs(
     shingle set is an ``array_distinct`` (no global DISTINCT shuffle), all
     k minhashes are ``array_min(transform(...))`` projections over it (no
     groupBy at all — the r5 form still shuffled one signature row per doc),
-    and the exact verify is ``array_intersect`` over the two candidates'
-    shingle arrays (no exploded-relation joins + count agg). The only
-    exchanges left are the (band, band_sig) candidate self-join and the two
-    candidate→array attach joins, all keyed and AQE-skew-safe; candidate
-    pairs alone pay verification, exactly as before.
+    and ``_verified_pairs`` intersects the two candidates' shingle arrays.
+    The only exchanges left are the (band, band_sig) candidate self-join
+    and the two candidate→array attach joins, all keyed and AQE-skew-safe;
+    candidate pairs alone pay verification.
 
     Same caching contract as ``ngram_jaccard_pairs``: the persisted shingle
     handle rides on the result — ``dedup.release(result)`` after
@@ -203,17 +183,4 @@ def minhash_dedup_pairs(
     ]
     sig = base.select("id", *mins)
     cand = lsh_candidate_pairs(sig, bands, num_hashes // bands)
-    j = (
-        cand.join(base.select(F.col("id").alias("a"), F.col("sh").alias("sh_a")), "a")
-        .join(base.select(F.col("id").alias("b"), F.col("sh").alias("sh_b")), "b")
-    )
-    jm = j.select(
-        "a",
-        "b",
-        F.size(F.array_intersect("sh_a", "sh_b")).cast("long").alias("common"),
-        F.size("sh_a").cast("long").alias("na"),
-        F.size("sh_b").cast("long").alias("nb"),
-    )
-    jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
-    out = jm.select("a", "b", jac.alias("jaccard")).filter(F.col("jaccard") >= tau)
-    return hold(out, base)
+    return hold(_verified_pairs(cand, base, tau), base)

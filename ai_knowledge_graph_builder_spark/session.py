@@ -38,6 +38,12 @@ def python_worker_conf(master: str) -> dict[str, str]:
     }
 
 
+def default_cpus() -> int:
+    """Cores of a local session: ``SPARK_GRAFT_CPUS``, else the CPUs this
+    process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def default_driver_memory() -> str:
     """40% of the host's MemTotal, capped at 16g: a fixed 16g heap on a
     15 GiB host without swap grows until the kernel OOM-kills the JVM."""
@@ -58,7 +64,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{default_cpus()}]"
     if shuffle_partitions is None:
         # match parallelism: one shuffle partition per core at local scale;
         # on a real cluster this is set to 2-3x total cores (or left to AQE).

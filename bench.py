@@ -121,10 +121,10 @@ def _one_window(spark, sf_dir: str) -> dict:
 
 def run_bench() -> dict:
     from ai_knowledge_graph_builder_spark.driver_queries import QUERIES
-    from ai_knowledge_graph_builder_spark.session import get_spark
+    from ai_knowledge_graph_builder_spark.session import default_cpus, get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     spark = get_spark("kg-bench", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -135,7 +135,7 @@ def run_bench() -> dict:
     spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .limit(64).repartition(int(cpus))
+        .limit(64).repartition(cpus)
         .mapInPandas(lambda it: (pdf.head(1) for pdf in it),
                      spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
         .write.format("noop").mode("overwrite").save()
@@ -208,7 +208,7 @@ def run_bench() -> dict:
         "triples": n_triples,
         "docs_per_sec": round(n_docs / kg_sec, 1),
         "triples_per_sec": round(n_triples / kg_sec, 2),
-        "cpus": int(cpus),
+        "cpus": cpus,
         # no background process left to stop; the key stays for output
         # compatibility
         "daemon_stopped": False,
@@ -238,14 +238,14 @@ def run_linking_modes() -> dict:
         resolve_mentions,
     )
     from ai_knowledge_graph_builder_spark.operators.mentions import detect_mentions
-    from ai_knowledge_graph_builder_spark.session import get_spark
+    from ai_knowledge_graph_builder_spark.session import default_cpus, get_spark
     from ai_knowledge_graph_builder_spark.sources.corpus import (
         generate_corpus,
         open_vocab_pages,
     )
 
     n_docs = int(os.environ.get("SPARK_GRAFT_OPENVOCAB_DOCS", "5000"))
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     spark = get_spark("kg-linking-modes", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -296,7 +296,7 @@ def run_linking_modes() -> dict:
         "n_mentions": n_mentions,
         "resolved_rows": rows["shuffle"],
         "timing": "min-of-2 per mode (timed action = count), same persisted mention relation",
-        "cpus": int(cpus),
+        "cpus": cpus,
     }
 
 

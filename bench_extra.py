@@ -31,7 +31,7 @@ from bench import HEADLINE, _spin_probe
 def main() -> None:
     from ai_knowledge_graph_builder_spark.bench_scaling import _steal_snapshot
     from ai_knowledge_graph_builder_spark.driver_queries import QUERIES
-    from ai_knowledge_graph_builder_spark.session import get_spark
+    from ai_knowledge_graph_builder_spark.session import default_cpus, get_spark
 
     args = sys.argv[1:]
 
@@ -48,7 +48,7 @@ def main() -> None:
     tag = _opt("--explain-tag")
     names = (_opt("--queries") or ",".join(HEADLINE)).split(",")
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     spark = get_spark("kg-bench-extra", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -56,7 +56,7 @@ def main() -> None:
     spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .limit(64).repartition(int(cpus))
+        .limit(64).repartition(cpus)
         .mapInPandas(lambda it: (pdf.head(1) for pdf in it),
                      spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
         .write.format("noop").mode("overwrite").save()
@@ -99,7 +99,7 @@ def main() -> None:
         "queries": timings,
         "steal_frac": steals,
         "spin_probe_s": round(probe, 3),
-        "cpus": int(cpus),
+        "cpus": cpus,
     }))
 
 

@@ -39,6 +39,24 @@ def test_fit_rejects_non_increasing_series(secs):
     assert bs.fit_rate(list(zip((2_000, 8_000, 16_000), secs))) is None
 
 
+def test_guarded_run_never_publishes_a_dirty_try_over_a_clean_one(monkeypatch):
+    """A fast try under heavy steal, then slower clean tries: the published
+    point is a clean one, with its own steal fraction."""
+    tries = iter([(1.0, 0.5), (2.0, 0.0), (2.1, 0.0), (2.2, 0.0), (2.3, 0.0)])
+    ticks = [0, 0]  # (steal, total), as /proc/stat counts them
+
+    def fake_fn():
+        sec, frac = next(tries)
+        ticks[0] += int(1000 * frac)
+        ticks[1] += 1000
+        return sec
+
+    monkeypatch.setattr(bs, "_steal_snapshot", lambda: tuple(ticks))
+    monkeypatch.setattr(bs.time, "sleep", lambda s: None)
+    sec, frac = bs._guarded_run(fake_fn)
+    assert (sec, frac) == (2.0, 0.0)
+
+
 @pytest.mark.parametrize("inverted", [False, True])
 def test_run_reports_efficiency_or_invalid(monkeypatch, sf_dir, inverted):
     """Fake probe timings through ``run_thread_scaling``: a linear series

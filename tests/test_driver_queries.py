@@ -1,7 +1,8 @@
 """Every driver query matches its DuckDB oracle at sf0.001 (row-count,
 column names, and order-insensitive value set) — a local mirror of the
-driver's CORRECTNESS gate. ``SPARK_GRAFT_TEST_SF_DIR`` overrides the scale
-dir (the scale-stability pass runs the same 43 comparisons at sf0.1)."""
+driver's CORRECTNESS gate — and passes the lambda lint (plan_lint.py).
+``SPARK_GRAFT_TEST_SF_DIR`` overrides the scale dir (the scale-stability
+pass runs the same 43 comparisons at sf0.1)."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import os
 
 import duckdb
 import pytest
+from plan_lint import lambda_violations
 
 from ai_knowledge_graph_builder_spark.driver_queries import ORACLES, QUERIES
 
@@ -44,6 +46,7 @@ def test_query_matches_oracle(spark, ddb, name):
     sdf = QUERIES[name](spark, SF_DIR)
     spark_rows = [tuple(r) for r in sdf.collect()]
     spark_cols = sdf.columns
+    assert lambda_violations(sdf) == []
 
     if name not in ORACLES:
         # rows-only query (non-SQL-expressible, e.g. binary media decode):

@@ -118,34 +118,51 @@ def test_text_queries_stay_jvm_side(spark, qname):
     assert "Python" not in p, p
 
 
-def test_minhash_signatures_single_aggregation_no_seed_shuffle(spark):
-    """The r5 minhash fusion: all k per-doc minhashes must come from ONE
-    partial/final groupBy(id) — a plan that shuffles a (id, seed)- or
-    (id, band)-keyed relation has regressed to the k-times-shuffle-volume
-    long format, invisible at test scale and dominant at corpus scale."""
+def test_minhash_dedup_pairs_no_seed_shuffle(spark):
+    """All k per-doc minhashes are in-row projections over the shingle
+    array — a plan that shuffles a (id, seed)- or (id, band)-keyed relation
+    has regressed to the k-times-shuffle-volume long format, invisible at
+    test scale and dominant at corpus scale."""
     from pyspark.sql import functions as F
 
-    from ai_knowledge_graph_builder_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-        token_shingles,
-    )
+    from ai_knowledge_graph_builder_spark.operators import dedup
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
     )
-    sh = token_shingles(docs, "doc_id", "text")
-    cand = lsh_candidate_pairs(minhash_signatures(sh, 16), 4, 4)
-    p = plan_str(cand)
+    pairs = dedup.minhash_dedup_pairs(docs, "doc_id", "text", tau=0.5)
+    p = plan_str(pairs)
+    dedup.release(pairs)
     # banding is projection-only: no exchange may partition by seed/band
     exchanges = [ln for ln in p.splitlines() if "Arguments: hashpartitioning" in ln]
     assert exchanges, p
     for ln in exchanges:
         assert "seed" not in ln, ln
-    # the candidate join partitions on (band, band_sig); the only id-keyed
-    # aggregation is the single signature groupBy — HashAggregate over id
-    # appears as partial+final once, with no (id, seed) grouping anywhere
     assert "seed#" not in p, "seed column resurfaced — long format is back"
+
+
+def test_shingle_split_runs_once_outside_the_lambda(spark):
+    """``shingle_arrays`` splits each text once, in a projection below the
+    n-gram ``transform``; the lambda lint flags the form that split inside
+    the lambda, which re-split the whole text for every element."""
+    from plan_lint import lambda_violations
+    from pyspark.sql import functions as F
+
+    from ai_knowledge_graph_builder_spark.operators.dedup import shingle_arrays
+
+    docs = spark.createDataFrame([("1", " a b  c d "), ("2", "e")], "doc_id string, text string")
+    sh = shingle_arrays(docs, "doc_id", "text")
+    assert lambda_violations(sh) == []
+    plan = sh._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") == 1, plan
+
+    words = F.split(F.trim(F.col("text")), r"\s+")
+    idxs = F.sequence(F.lit(0), F.greatest(F.size(words) - 3, F.lit(0)))
+    inline = F.when(
+        F.size(words) >= 3,
+        F.transform(idxs, lambda i: F.concat_ws(" ", *[F.element_at(words, i + j + 1) for j in range(3)])),
+    ).otherwise(F.array(F.concat_ws(" ", words)))
+    assert lambda_violations(docs.select(inline.alias("sh"))) == ["StringSplit in a lambda over text"]
 
 
 def test_ivf_fixed_codebook_assignment_is_projection_only(spark):

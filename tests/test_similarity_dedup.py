@@ -1,9 +1,13 @@
-"""LSH cosine join vs brute force; MinHash-LSH and exact dedup."""
+"""LSH cosine join vs brute force; exact, MinHash-LSH and n-gram Jaccard dedup."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
+from ai_knowledge_graph_builder_spark.operators import dedup
 from ai_knowledge_graph_builder_spark.operators.dedup import exact_dedup_ids, minhash_dedup_pairs
 from ai_knowledge_graph_builder_spark.operators.similarity import (
     brute_force_cosine_pairs,
@@ -121,3 +125,58 @@ def test_ivf_fixed_codebook_assignment_is_cosine_argmax(spark):
         items, queries, k=1, n_probe=1, centroids=[[2.0, 0.0], [0.0, 1.0]]
     ).collect()
     assert [(r["query_id"], r["item_id"]) for r in got] == [("q1", "i1")]
+
+
+# a doc shorter than n words, docs with repeated shingles, near copies,
+# whitespace that trim/split must absorb
+HAND_DOCS = [
+    ("1", "the quick brown fox jumps over the lazy dog"),
+    ("2", "quick brown fox jumps over the lazy dog"),
+    ("3", "the quick brown fox jumps over a lazy dog"),
+    ("4", "a b a b a b a b"),
+    ("5", "a b a b a"),
+    ("6", "hello"),
+    ("7", "  hello "),
+    ("8", "hello world"),
+    ("9", "world hello world hello"),
+]
+
+
+def _python_shingles(text: str, n: int) -> set[str]:
+    w = re.split(r"\s+", text.strip())
+    if len(w) < n:
+        return {" ".join(w)}
+    return {" ".join(w[i:i + n]) for i in range(len(w) - n + 1)}
+
+
+def _python_pairs(n: int, tau: float) -> dict:
+    sets = {i: _python_shingles(t, n) for i, t in HAND_DOCS}
+    out = {}
+    for a in sets:
+        for b in sets:
+            if a < b:
+                common = len(sets[a] & sets[b])
+                jac = common / (len(sets[a]) + len(sets[b]) - common)
+                if jac >= tau:
+                    out[(a, b)] = jac
+    return out
+
+
+@pytest.mark.parametrize("n", [2, 3])
+def test_ngram_jaccard_pairs_equal_python_set_jaccard(spark, n):
+    """Exact n-gram Jaccard equals a pure-Python set Jaccard, pair for pair
+    and bit for bit; MinHash-LSH finds a subset of the trigram pairs, each
+    with the same Jaccard."""
+    docs = spark.createDataFrame(HAND_DOCS, "doc_id string, text string")
+    tau = 0.3
+    ng = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", tau=tau, n=n)
+    got = {(r["a"], r["b"]): r["jaccard"] for r in ng.collect()}
+    dedup.release(ng)
+    want = _python_pairs(n, tau)
+    assert any(j < 1.0 for j in want.values()) and any(j == 1.0 for j in want.values())
+    assert got == want
+    if n == 3:
+        mh = dedup.minhash_dedup_pairs(docs, "doc_id", "text", tau=tau)
+        lsh = {(r["a"], r["b"]): r["jaccard"] for r in mh.collect()}
+        dedup.release(mh)
+        assert lsh and all(want[k] == v for k, v in lsh.items())

@@ -1,5 +1,5 @@
 """The Python worker daemon's zip-directory guard (worker_daemon.py) and the
-host-sized driver heap (session.py)."""
+host-sized driver heap and core count (session.py)."""
 
 from __future__ import annotations
 
@@ -17,6 +17,7 @@ from ai_knowledge_graph_builder_spark import worker_daemon
 from ai_knowledge_graph_builder_spark.session import (
     PACKAGE_ROOT,
     PYTHON_DAEMON_MODULE,
+    default_cpus,
     default_driver_memory,
     python_worker_conf,
 )
@@ -149,3 +150,10 @@ def test_default_driver_memory_is_sized_to_the_host():
     assert mem.endswith(("m", "g"))
     mb = int(mem[:-1]) * (1024 if mem.endswith("g") else 1)
     assert 0 < mb <= 16 * 1024
+
+
+def test_default_cpus_is_the_affinity_count(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3
