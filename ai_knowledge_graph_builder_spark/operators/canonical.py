@@ -27,7 +27,7 @@ import re
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..cache import hold
+from ..cache import hold, local_checkpoint, unpersist
 from .similarity import lsh_cosine_join
 
 
@@ -35,8 +35,10 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """(a, b) undirected edges → (id, rep) with rep = min id in component.
     Iterative min-label propagation; each round is one shuffle (groupBy min).
     Converges in O(diameter) rounds — entity-name clusters are tiny and
-    star-shaped, so 3-5 rounds in practice; max_iter bounds pathology. The
-    result holds the final label cache (``cache.release``)."""
+    star-shaped, so 3-5 rounds in practice; max_iter bounds pathology.
+    Each round's labels are a local checkpoint, so its plan does not grow
+    with the rounds before it (each round reads the last one twice). The
+    result holds the final round's checkpoint (``cache.release``)."""
     sym = edges.select(F.col("a").alias("x"), F.col("b").alias("y")).unionAll(
         edges.select(F.col("b").alias("x"), F.col("a").alias("y"))
     )
@@ -56,17 +58,16 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         # below both materializes the cache and decides termination — no
         # separate labels-vs-labels join or extra action per round
         # (VERDICT r2 'What's wrong' #3)
-        new_labels = (
+        new_labels = local_checkpoint(
             labels.join(neigh, "id", "left")
             .select(
                 "id",
                 F.least(F.col("rep"), F.coalesce("nrep", "rep")).alias("rep"),
                 (F.coalesce("nrep", "rep") < F.col("rep")).alias("changed"),
             )
-            .persist()
         )
         changed = new_labels.agg(F.sum(F.col("changed").cast("long"))).first()[0]
-        labels.unpersist()
+        unpersist(labels)
         labels = new_labels
         if not changed:
             break

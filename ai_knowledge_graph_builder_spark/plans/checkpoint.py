@@ -16,6 +16,17 @@ key range. A resumed run can therefore verify integrity before trusting a
 snapshot, and the judge/driver can audit exactly what each partition
 contributed.
 
+Layout: an unpartitioned stage writes one file per partition of its plan.
+A partitioned stage (``partitionBy``, e.g. ``edges``/``triples`` by
+``predicate``) is rebalanced on its partition columns first, so each value
+is written by one task into one file: ``predicate=X/part-….parquet``.
+Without it every upstream task wrote a file into every value it held (40
+files for the 10 predicates of a 74-page corpus), and each file costs a
+footer read in lineage and integrity checks. Unlike ``repartition``, a
+rebalance lets AQE split a partition over its advisory size, so a hot value
+is not one task at scale (then it has a few files). The layout is not part
+of the manifest format: snapshots written either way read back identically.
+
 On a real cluster these directories are Iceberg tables (writeTo(...)
 .createOrReplace / overwritePartitions) and the manifest is the Iceberg
 snapshot; the stage API below is storage-agnostic by design.
@@ -164,13 +175,16 @@ def table_fingerprints(tables: dict[str, DataFrame | None]) -> dict[str, str]:
 
     Order-insensitive: a bit_xor of per-row xxhash64 values. to_json first,
     as map-typed columns are not hashable. An empty table gives ``"0:None"``
-    and a missing (None) one ``"none"``."""
+    and a missing (None) one ``"none"``. The row hash is one SQL expression:
+    ``F.struct`` over the names costs a py4j round trip per column."""
     present = {name: df for name, df in tables.items() if df is not None}
     agg: dict[str, str] = {}
     if present:
         rows = reduce(DataFrame.unionAll, [
-            df.select(F.lit(name).alias("tag"),
-                      F.xxhash64(F.to_json(F.struct(*sorted(df.columns)))).alias("h"))
+            df.select(F.lit(name).alias("tag"), F.expr(
+                "xxhash64(to_json(struct({})))".format(
+                    ", ".join("`" + c.replace("`", "``") + "`" for c in sorted(df.columns)))
+            ).alias("h"))
             for name, df in present.items()
         ])
         agg = {r["tag"]: f"{r['n']}:{r['h']}" for r in rows.groupBy("tag").agg(
@@ -194,9 +208,11 @@ def write_stage(
     t0 = time.perf_counter()
     stage_dir = Path(stage_dir)
     schema = readback_schema(df.schema, partition_by)
-    writer = df.write.mode("overwrite")
     if partition_by:
-        writer = writer.partitionBy(*partition_by)
+        # one task per partition value, so one file each (see module doc)
+        writer = df.hint("rebalance", *partition_by).write.mode("overwrite").partitionBy(*partition_by)
+    else:
+        writer = df.write.mode("overwrite")
     writer.parquet(str(stage_dir))
     build_s = time.perf_counter() - t0
 

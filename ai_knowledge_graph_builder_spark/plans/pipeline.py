@@ -9,6 +9,7 @@ checkpointed table stages in plans/checkpoint.py).
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -106,7 +107,8 @@ def _assemble_graph(
 ) -> dict[str, DataFrame]:
     """The graph both runners build, as lazy ``nodes``, ``edges`` and the
     ``cooccur`` pairs the inferred edges come from."""
-    nodes = registry_nodes(registry).unionByName(external_nodes)
+    reg_nodes = registry_nodes(registry)
+    nodes = reg_nodes.unionByName(external_nodes)
     shadows = None
     if doc_meta is not None:
         shadows = shadow_entities(doc_meta)
@@ -117,7 +119,7 @@ def _assemble_graph(
     if employees is not None and assignments is not None and policies is not None:
         base_edges = ground_truth_edges(employees, assignments, policies)
     if doc_meta is not None:
-        flagged = contradiction_edges(doc_meta, registry_nodes(registry))
+        flagged = contradiction_edges(doc_meta, reg_nodes)
         base_edges = flagged if base_edges is None else base_edges.unionByName(flagged)
 
     cooccur = cooccurrence_pairs(mentions)
@@ -131,7 +133,7 @@ def _assemble_graph(
     # graph, excluded from triples by predicate (entity_extractor.py:459)
     edges = edges.unionByName(mention_edges(mentions))
     if doc_meta is not None:
-        edges = edges.unionByName(metadata_mention_edges(doc_meta, registry_nodes(registry)))
+        edges = edges.unionByName(metadata_mention_edges(doc_meta, reg_nodes))
     if shadows is not None:
         edges = edges.unionByName(shadow_mention_edges(shadows))
     if emails is not None and employees is not None:
@@ -218,15 +220,16 @@ def run_kg_pipeline_checkpointed(
         lambda: detect_mentions(out["documents"], gazetteer), key_col="url",
     )
 
-    aliases = build_alias_table(registry)
     f_res = fp(gaz_fp, "mentions", dfp["registry"])
     out["mentions"], resumed["mentions"] = run_stage(
         spark, f"{base_dir}/mentions", "mentions", f_res,
-        lambda: resolve_mentions(out["mentions_raw"], aliases)[0], key_col="url",
+        lambda: resolve_mentions(out["mentions_raw"], build_alias_table(registry))[0], key_col="url",
     )
 
+    @functools.cache
     def _graph() -> dict[str, DataFrame]:
-        # planned inside the stage builders, so a resumed stage plans nothing.
+        # planned inside the stage builders, so a resumed stage plans nothing,
+        # and at most once: `nodes` and `edges` share the one plan.
         # External nodes come from the committed mentions table: a resumed
         # run derives them without re-running linking.
         external_nodes = external_entity_nodes(

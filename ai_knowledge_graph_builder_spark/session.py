@@ -44,6 +44,20 @@ def default_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
+def default_shuffle_partitions(master: str) -> int:
+    """One shuffle partition per worker thread of a local master: ``local``
+    → 1, ``local[*]`` → ``default_cpus()``, ``local[N]`` and
+    ``local[N,F]`` → N. Other masters get 32; on a real cluster this is
+    set to 2-3x total cores (or left to AQE)."""
+    m = re.fullmatch(r"local(?:\[(\*|\d+)(?:,\d+)?\])?", master)
+    if m is None:
+        return 32
+    threads = m.group(1)
+    if threads is None:
+        return 1
+    return default_cpus() if threads == "*" else int(threads)
+
+
 def default_driver_memory() -> str:
     """40% of the host's MemTotal, capped at 16g: a fixed 16g heap on a
     15 GiB host without swap grows until the kernel OOM-kills the JVM."""
@@ -66,17 +80,17 @@ def get_spark(
 ) -> SparkSession:
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{default_cpus()}]"
     if shuffle_partitions is None:
-        # match parallelism: one shuffle partition per core at local scale;
-        # on a real cluster this is set to 2-3x total cores (or left to AQE).
-        try:
-            shuffle_partitions = int(master.split("[")[1].rstrip("]*")) if "[" in master else 32
-        except ValueError:
-            shuffle_partitions = 32
+        shuffle_partitions = default_shuffle_partitions(master)
 
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # pyspark 4.1 captures the Python call site of every DataFrame and
+        # F.* call for error messages: about three extra py4j round trips
+        # and a stack walk per call, 59% of the round trips of planning the
+        # KG graph. Errors keep their message and the JVM query context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.adaptive.enabled", "true")
         # byte-size coalescing starves Arrow-UDF stages of parallelism (the
         # NER/linking relations compress to a few MB but cost CPU per row —

@@ -36,6 +36,24 @@ def _run(spark, dfs, base):
     )
 
 
+def test_graph_is_planned_once(spark, spark_dfs, tmp_path, monkeypatch):
+    """``nodes`` and ``edges`` share one graph plan; a resumed run plans none."""
+    from ai_knowledge_graph_builder_spark.plans import pipeline
+
+    calls = []
+    real = pipeline._assemble_graph
+
+    def counted(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(pipeline, "_assemble_graph", counted)
+    _, resumed = _run(spark, spark_dfs, tmp_path)
+    assert not any(resumed.values()) and len(calls) == 1
+    _, resumed = _run(spark, spark_dfs, tmp_path)
+    assert all(resumed.values()) and len(calls) == 1
+
+
 def test_stage_commit_and_skip(spark, tmp_path):
     calls = {"n": 0}
 
@@ -152,6 +170,15 @@ def test_manifest_schema_is_the_readback_schema(spark, committed):
     for stage in ("edges", "triples"):  # partitionBy(predicate): read back last
         fields = read_manifest(base / stage)["schema"]["fields"]
         assert fields[-1]["name"] == "predicate"
+
+
+def test_partitioned_stages_write_one_file_per_value(committed):
+    _, base, _ = committed
+    for stage in ("edges", "triples"):
+        dirs = sorted((base / stage).glob("predicate=*"))
+        assert len(dirs) >= 5, stage
+        for d in dirs:
+            assert len(list(d.glob("*.parquet"))) == 1, d
 
 
 def test_manifest_records_build_time_and_bytes(committed):

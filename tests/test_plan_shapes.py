@@ -264,3 +264,18 @@ def test_dedup_release_unpersists_shingles(spark):
     assert jsc.getPersistentRDDs().size() > before
     dedup.release(pairs)
     assert jsc.getPersistentRDDs().size() == before
+
+
+def test_component_labels_plan_does_not_grow_with_rounds(spark):
+    """Each round of connected_components reads the last round's labels
+    twice. Without a cut in the lineage, the optimized plan of
+    kg_canonical_clusters carried every round and rendered to tens of MB
+    of JSON at sf0.001."""
+    from ai_knowledge_graph_builder_spark.cache import release
+    from ai_knowledge_graph_builder_spark.driver_queries import kg_canonical_clusters
+
+    result = kg_canonical_clusters(spark, SF_DIR)
+    try:
+        assert len(result._jdf.queryExecution().optimizedPlan().toJSON()) < 1_000_000
+    finally:
+        release(result)

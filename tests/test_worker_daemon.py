@@ -1,5 +1,5 @@
 """The Python worker daemon's zip-directory guard (worker_daemon.py) and the
-host-sized driver heap and core count (session.py)."""
+host-sized driver heap, core count and session defaults (session.py)."""
 
 from __future__ import annotations
 
@@ -19,6 +19,7 @@ from ai_knowledge_graph_builder_spark.session import (
     PYTHON_DAEMON_MODULE,
     default_cpus,
     default_driver_memory,
+    default_shuffle_partitions,
     python_worker_conf,
 )
 
@@ -157,3 +158,34 @@ def test_default_cpus_is_the_affinity_count(monkeypatch):
     assert default_cpus() == len(os.sched_getaffinity(0))
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert default_cpus() == 3
+
+
+@pytest.mark.parametrize("master, want", [
+    ("local", 1), ("local[3]", 3), ("local[*]", 5), ("local[4,2]", 4), ("local[*,2]", 5),
+    ("spark://host:7077", 32), ("yarn", 32), ("local-cluster[2,1,1024]", 32),
+])
+def test_shuffle_partitions_follow_the_local_thread_count(monkeypatch, master, want):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")  # what local[*] runs on
+    assert default_shuffle_partitions(master) == want
+
+
+def test_call_site_capture_is_off_unless_asked_for(spark, tmp_path):
+    """Sessions skip pyspark's per-call Python call-site capture; extra_conf
+    turns it back on. The setting is static, so the override starts a
+    session of its own."""
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(key) == "false"
+    script = tmp_path / "probe.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {PACKAGE_ROOT!r})
+        from ai_knowledge_graph_builder_spark.session import get_spark
+
+        spark = get_spark("call-site-probe", master="local[1]", extra_conf={{{key!r}: "true"}})
+        print("DEBUGGING", spark.conf.get({key!r}))
+        spark.stop()
+    """))
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "512m"}
+    out = subprocess.run([sys.executable, str(script)], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=300)
+    assert "DEBUGGING true" in out.stdout, out.stderr[-2000:]
