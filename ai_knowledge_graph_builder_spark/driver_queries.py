@@ -1799,16 +1799,14 @@ def _planted_near_dup_pairs(spark: SparkSession, sf_dir: str, find_pairs) -> Dat
     both = docs.select(F.explode(variants).alias("v")).select(
         F.col("v.doc_id").cast("string").alias("doc_id"), F.col("v.text").alias("text")
     )
-    pairs = find_pairs(both)
     # tie-consistent 4dp: floor(x·1e4 + 0.5) is the same IEEE arithmetic in
     # both engines even when the integer-ratio jaccard lands on a .xxxx5
     # tie (engine ROUND implementations disagree there — see quality_score)
-    out = pairs.select(
+    return find_pairs(both).select(
         F.col("a").cast("long").alias("a"),
         F.col("b").cast("long").alias("b"),
         (F.floor(F.col("jaccard") * 10000 + F.lit(0.5)) / 10000.0).alias("jaccard"),
     )
-    return hold(out, pairs)
 
 
 def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2819,8 +2817,7 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle → inverted-index equi-join (recall 1.0 — no banding) →
     exact-Jaccard verify >= 0.4. Bigrams + the lower threshold distinguish
     this row from minhash_pairs (trigrams, LSH candidates, 0.5); together
-    they value-check both candidate generators over the same shingle-array
-    verify."""
+    they value-check both near-dup self-joins and their in-row verify."""
     from .operators.dedup import ngram_jaccard_pairs
 
     return _planted_near_dup_pairs(spark, sf_dir, lambda both: ngram_jaccard_pairs(

@@ -20,8 +20,3 @@ def external_entity_id(entity_text: str, label: str) -> str:
     (``ext_{label.lower()}_{abs(hash(text)) % 100000:05d}``) with the salted
     hash replaced by stable_hash64."""
     return f"ext_{label.lower()}_{stable_hash64(entity_text) % 100000:05d}"
-
-
-def text_checksum(s: str) -> str:
-    """Lineage checksum for a text payload."""
-    return hashlib.md5(s.encode("utf-8")).hexdigest()

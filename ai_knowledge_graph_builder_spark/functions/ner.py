@@ -4,8 +4,8 @@ The reference runs spaCy ``en_core_web_md`` over every document and keeps
 entity spans labelled PERSON/ORG/PRODUCT/GPE/LAW (entity_extractor.py:169-190).
 spaCy is not available in this environment, so mention detection is a pure
 deterministic rule matcher with the same interface — spans of
-``(text, label, start_char, end_char)`` in document order. If spaCy IS
-installed, ``SpacyNER`` (gated import) can be dropped in instead; everything
+``(text, label, start_char, end_char)`` in document order. Any detector
+with that interface (spaCy's, say) can be dropped in instead; everything
 downstream (linking, aggregation, inference) is detector-agnostic.
 
 Detector rules (fixed; the pandas test oracle runs the identical function, so
@@ -140,23 +140,3 @@ class RuleNER:
                 out.append(Mention(txt, label, start, end))
                 cur_end = end
         return out
-
-
-def try_spacy_ner(model: str = "en_core_web_md"):
-    """Gated spaCy detector (reference parity path when spaCy is installed;
-    entity_extractor.py:84-92,169-190). Returns None when unavailable."""
-    try:  # pragma: no cover - spaCy absent in this environment
-        import spacy
-
-        nlp = spacy.load(model)
-
-        def detect(text: str) -> list[Mention]:
-            return [
-                Mention(e.text, e.label_, e.start_char, e.end_char)
-                for e in nlp(text).ents
-                if e.label_ in NER_LABELS
-            ]
-
-        return detect
-    except Exception:
-        return None

@@ -2,21 +2,29 @@
 Jaccard; SimHash lives in driver_queries as a portable query, embedding
 near-dup is operators/similarity.lsh_cosine_join).
 
-One array kernel serves both near-dup paths. ``shingle_arrays`` splits each
-text once and keeps its distinct token n-grams as an in-row array. A
-candidate generator proposes (a, b) pairs: LSH bands over in-row md5
-minhashes, or the lossless shared-shingle self-join. ``_verified_pairs``
-then scores every candidate by ``array_intersect`` over the two arrays, so
-only candidate pairs pay verification. All hashing is md5-based (portable
-across Spark/DuckDB/Python) and everything runs JVM-side with higher-order
-functions — no Python in the hot path.
+Both near-dup operators are one self-join each. ``shingle_arrays`` splits
+each text once and keeps its distinct token n-grams as an in-row array; the
+operator explodes it ONCE (by shingle, or by LSH band signature) and joins
+that frame with itself. Both join sides read one shuffle (a
+``ReusedExchange``), and every pair is verified in the joined row, so
+nothing is cached and there is no candidate relation to join back. All
+hashing is md5-based (portable across Spark/DuckDB/Python) and everything
+runs JVM-side with higher-order functions — no Python in the hot path.
+
+Explodes are ``_outer`` on purpose: over a lazily computed array a plain
+``explode`` makes Spark infer a ``size(arr) > 0`` filter and push it into
+the scan, inlining the whole shingle transform (a split in its lambda, and
+every md5 pass) into the filter. The arrays are never empty, so the rows
+are the same.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..cache import hold, release  # noqa: F401  (dedup.release stays public)
+# the operators cache nothing; ``dedup.release`` stays public for callers
+# that release every result they materialize
+from ..cache import release  # noqa: F401
 
 
 def exact_dedup_ids(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -59,8 +67,14 @@ def token_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Dat
     rows must pre-aggregate (concat or dropDuplicates) first, or shingle
     sets / Jaccard counts double."""
     return shingle_arrays(df, id_col, text_col, n).select(
-        "id", F.explode("sh").alias("shingle")
+        "id", F.explode_outer("sh").alias("shingle")
     )
+
+
+def _jaccard(common, na, nb):
+    """|a ∩ b| / (|a| + |b| − |a ∩ b|) in long arithmetic — the one formula
+    both operators and the DuckDB oracles compute, bit for bit."""
+    return common / (na + nb - common)
 
 
 def ngram_jaccard_pairs(
@@ -68,73 +82,29 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via a shared-shingle inverted
     index: any pair with jaccard > 0 shares at least one shingle, so the
-    equi-join on shingle is a lossless candidate generator (recall 1.0) and
-    every candidate is verified exactly — the exact counterpart of
-    ``minhash_dedup_pairs``. Candidate volume is Σ_s df(s)², so at corpus
-    scale hot shingles make this quadratic; prefer the minhash/LSH path
-    there (or bound df with a stop-shingle cutoff) and use this as the
-    verifier on samples.
-
-    Caching contract: the shingle arrays are persisted because the returned
-    lazy plan reads them three times (the exploded candidate join, then
-    both sides of the verify). The persisted handle rides on the result
-    (``cache.hold``) — call ``dedup.release(result)`` after materializing
-    to unpersist deterministically (``spark.catalog.clearCache()`` also
-    works; bench.py clears between tries)."""
-    base = shingle_arrays(df, id_col, text_col, n).persist()
-    sh = base.select("id", F.explode("sh").alias("shingle"))
-    cand = (
-        sh.select(F.col("id").alias("a"), "shingle")
-        .join(sh.select(F.col("id").alias("b"), "shingle"), "shingle")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
+    self-join of the exploded (id, n, shingle) frame on shingle is lossless
+    (recall 1.0), and counting a pair's joined rows IS its intersection —
+    the exact counterpart of ``minhash_dedup_pairs``. Both join sides read
+    one shuffle; nothing is cached. Joined volume is Σ_s df(s)², so at
+    corpus scale hot shingles make this quadratic; prefer the minhash/LSH
+    path there (or bound df with a stop-shingle cutoff) and use this as the
+    verifier on samples."""
+    ex = shingle_arrays(df, id_col, text_col, n).select(
+        "id", F.size("sh").cast("long").alias("n"), F.explode_outer("sh").alias("shingle")
     )
-    return hold(_verified_pairs(cand, base, tau), base)
-
-
-def lsh_candidate_pairs(signatures: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
-    """Band the signature vector; candidates share any (band, band_sig).
-
-    Banding over the wide signature row is a pure projection (explode of a
-    literal-built array) — zero extra shuffle; only the candidate self-join
-    exchanges, keyed on (band, band_sig) so buckets stay bounded."""
-    band_structs = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "|",
-                *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)],
-            ).alias("band_sig"),
+    x, y = ex.alias("x"), ex.alias("y").hint("merge")
+    pairs = (
+        x.join(y, (F.col("x.shingle") == F.col("y.shingle")) & (F.col("x.id") < F.col("y.id")))
+        .groupBy(
+            F.col("x.id").alias("a"),
+            F.col("y.id").alias("b"),
+            F.col("x.n").alias("na"),
+            F.col("y.n").alias("nb"),
         )
-        for b in range(bands)
-    ])
-    sigs = signatures.select("id", F.explode(band_structs).alias("bs")).select(
-        "id", F.col("bs.band").alias("band"), F.col("bs.band_sig").alias("band_sig")
+        .count()
     )
-    a = sigs.select(F.col("id").alias("a"), "band", "band_sig")
-    b = sigs.select(F.col("id").alias("b"), "band", "band_sig")
-    return a.join(b, ["band", "band_sig"]).filter(F.col("a") < F.col("b")).select("a", "b").distinct()
-
-
-def _verified_pairs(cand: DataFrame, base: DataFrame, tau: float) -> DataFrame:
-    """(a, b, jaccard) for each candidate pair whose exact Jaccard is >= tau:
-    |sh_a ∩ sh_b| / (|sh_a| + |sh_b| − |sh_a ∩ sh_b|) over the two rows'
-    distinct shingle arrays in ``base`` (id, sh) — the one verify both
-    candidate generators share."""
-    j = (
-        cand.join(base.select(F.col("id").alias("a"), F.col("sh").alias("sh_a")), "a")
-        .join(base.select(F.col("id").alias("b"), F.col("sh").alias("sh_b")), "b")
-    )
-    jm = j.select(
-        "a",
-        "b",
-        F.size(F.array_intersect("sh_a", "sh_b")).cast("long").alias("common"),
-        F.size("sh_a").cast("long").alias("na"),
-        F.size("sh_b").cast("long").alias("nb"),
-    )
-    jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
-    return jm.select("a", "b", jac.alias("jaccard")).filter(F.col("jaccard") >= tau)
+    jac = _jaccard(F.col("count"), F.col("na"), F.col("nb"))
+    return pairs.select("a", "b", jac.alias("jaccard")).filter(F.col("jaccard") >= tau)
 
 
 def shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
@@ -157,19 +127,17 @@ def minhash_dedup_pairs(
     """Near-duplicate pairs with exact Jaccard >= tau among MinHash-LSH
     candidates (shingle → minhash → band → bucket-join → verify).
 
-    r7 shape — everything per-document happens IN THE ROW: the distinct
-    shingle set is an ``array_distinct`` (no global DISTINCT shuffle), all
-    k minhashes are ``array_min(transform(...))`` projections over it (no
-    groupBy at all — the r5 form still shuffled one signature row per doc),
-    and ``_verified_pairs`` intersects the two candidates' shingle arrays.
-    The only exchanges left are the (band, band_sig) candidate self-join
-    and the two candidate→array attach joins, all keyed and AQE-skew-safe;
-    candidate pairs alone pay verification.
-
-    Same caching contract as ``ngram_jaccard_pairs``: the persisted shingle
-    handle rides on the result — ``dedup.release(result)`` after
-    materializing."""
-    base = shingle_arrays(df, id_col, text_col).persist()
+    Everything per-document happens IN THE ROW: the distinct shingle set is
+    an ``array_distinct``, all k minhashes are ``array_min(transform(...))``
+    over it, and ``bs`` holds the ``bands`` band signatures. The
+    (id, sh, bs) row is exploded by band and self-joined on
+    (band, band_sig), both sides reading one shuffle. A pair that shares
+    several bands meets once per shared band; it is kept only on the FIRST
+    band the two ``bs`` arrays agree on, which replaces a DISTINCT, and its
+    Jaccard is ``array_intersect`` over the two joined rows' arrays. So the
+    band exchange carries ``bands`` copies of each shingle array — the
+    price of verifying without joining candidates back to the arrays.
+    Nothing is cached."""
 
     # NOTE: a default-arg lambda (``lambda x, _i=i``) must NOT be used
     # here — pyspark treats any 2-parameter transform lambda as
@@ -177,10 +145,25 @@ def minhash_dedup_pairs(
     def _member(i: int):
         return lambda x: _seed_md5(i, x)
 
-    mins = [
-        F.array_min(F.transform("sh", _member(i))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    sig = base.select("id", *mins)
-    cand = lsh_candidate_pairs(sig, bands, num_hashes // bands)
-    return hold(_verified_pairs(cand, base, tau), base)
+    mins = [F.array_min(F.transform("sh", _member(i))) for i in range(num_hashes)]
+    r = num_hashes // bands
+    bs = F.array(*[F.concat_ws("|", *mins[b * r:(b + 1) * r]) for b in range(bands)])
+    ex = shingle_arrays(df, id_col, text_col).select("id", "sh", bs.alias("bs")).select(
+        "id", "sh", "bs", F.posexplode_outer("bs").alias("band", "band_sig")
+    )
+    x, y = ex.alias("x"), ex.alias("y").hint("merge")
+    first_shared = F.array_position(F.zip_with("x.bs", "y.bs", lambda p, q: p == q), True) - 1
+    j = x.join(
+        y,
+        (F.col("x.band") == F.col("y.band"))
+        & (F.col("x.band_sig") == F.col("y.band_sig"))
+        & (F.col("x.id") < F.col("y.id")),
+    ).filter(first_shared == F.col("x.band"))
+    jac = _jaccard(
+        F.size(F.array_intersect("x.sh", "y.sh")).cast("long"),
+        F.size("x.sh").cast("long"),
+        F.size("y.sh").cast("long"),
+    )
+    return j.select(F.col("x.id").alias("a"), F.col("y.id").alias("b"), jac.alias("jaccard")).filter(
+        F.col("jaccard") >= tau
+    )

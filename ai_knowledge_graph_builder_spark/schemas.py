@@ -23,23 +23,6 @@ PAGES = T.StructType(
     ]
 )
 
-# documents = pages + extracted text/word_count (Document node analog,
-# neo4j_loader.py:286-293)
-DOCUMENTS = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        # document processing order is sorted(url) — the url itself is the
-        # ordering key (replaces the reference's sorted(glob) arrival order,
-        # neo4j_loader.py:252-269); no global rank column is materialized.
-        T.StructField("doc_type", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("extracted_text", T.StringType(), True),
-        T.StructField("word_count", T.IntegerType(), True),
-        T.StructField("confidence", T.DoubleType(), True),
-        T.StructField("has_contradictions", T.BooleanType(), True),
-    ]
-)
-
 # entity registry (entities.json analog, entity_extractor.py:110-151)
 REGISTRY = T.StructType(
     [
@@ -51,16 +34,6 @@ REGISTRY = T.StructType(
         T.StructField("last_name", T.StringType(), True),
         T.StructField("props", T.MapType(T.StringType(), T.StringType()), True),
         T.StructField("insertion_idx", T.LongType(), False),  # registry order
-    ]
-)
-
-# alias dictionary (broadcast side; entity_extractor.py:119-149)
-ALIASES = T.StructType(
-    [
-        T.StructField("alias", T.StringType(), False),
-        T.StructField("entity_id", T.StringType(), False),
-        T.StructField("insertion_idx", T.LongType(), False),  # dict-order semantics:
-        # last-wins on collision, first-max on fuzzy ties (SURVEY.md §7.4)
     ]
 )
 
@@ -76,18 +49,6 @@ MENTIONS_RAW = T.StructType(
         T.StructField("label", T.StringType(), False),
         T.StructField("start", T.IntegerType(), False),
         T.StructField("end", T.IntegerType(), False),
-    ]
-)
-
-# resolved mentions (entity_extractor.py:208-259)
-MENTIONS_RESOLVED = T.StructType(
-    MENTIONS_RAW.fields
-    + [
-        T.StructField("resolved_id", T.StringType(), True),
-        T.StructField("resolution_method", T.StringType(), True),  # exact_match/
-        # fuzzy_match/external_entity
-        T.StructField("resolution_type", T.StringType(), True),  # canonical/external
-        T.StructField("confidence", T.DoubleType(), True),
     ]
 )
 
@@ -118,25 +79,6 @@ EDGES = T.StructType(
     ]
 )
 
-# SPO triples (entity_extractor.py:474-492), flattened: nested subject/object
-# structs become prefixed columns so the table is parquet/SQL friendly.
-TRIPLES = T.StructType(
-    [
-        T.StructField("subject_id", T.StringType(), False),
-        T.StructField("subject_name", T.StringType(), True),
-        T.StructField("subject_type", T.StringType(), True),
-        T.StructField("predicate", T.StringType(), False),
-        T.StructField("object_id", T.StringType(), False),
-        T.StructField("object_name", T.StringType(), True),
-        T.StructField("object_type", T.StringType(), True),
-        T.StructField("confidence", T.DoubleType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("flagged", T.BooleanType(), False),
-        T.StructField("inferred", T.BooleanType(), False),
-        T.StructField("text", T.StringType(), True),
-    ]
-)
-
 # chunks (embedding_generator.py:219-260)
 CHUNKS = T.StructType(
     [
@@ -156,17 +98,5 @@ EMBEDDINGS = T.StructType(
         T.StructField("item_id", T.StringType(), False),
         T.StructField("kind", T.StringType(), False),  # triple|chunk
         T.StructField("embedding", T.ArrayType(T.FloatType()), False),
-    ]
-)
-
-# per-partition lineage rows (north rule: input split, counts, checksums)
-LINEAGE = T.StructType(
-    [
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("row_count", T.LongType(), False),
-        T.StructField("checksum", T.StringType(), True),  # xor/sum of row hashes
-        T.StructField("min_key", T.StringType(), True),
-        T.StructField("max_key", T.StringType(), True),
     ]
 )

@@ -469,59 +469,6 @@ def _registry_df(reg: dict[str, list[dict]]) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def expand_aliases(registry: pd.DataFrame) -> pd.DataFrame:
-    """Alias dictionary with dict-order semantics (entity_extractor.py:119-149).
-
-    Returns DataFrame (alias, entity_id, insertion_idx) where insertion_idx is
-    the global assignment counter; a later assignment to the same alias
-    OVERWRITES the earlier one (plain dict semantics), which downstream code
-    replicates with a last-wins window. Expansion per type:
-    employee → full, first, last, "mr. last", "ms. last"; project → name,
-    "project {name}"; product/policy → name; regulation → name + full_name."""
-    rows = []
-    idx = 0
-
-    def add(alias: str | None, eid: str):
-        nonlocal idx
-        if alias:
-            rows.append({"alias": alias.lower(), "entity_id": eid, "insertion_idx": idx})
-            idx += 1
-
-    for r in registry.itertuples(index=False):
-        if r.entity_type == "employee":
-            add(r.full_name, r.entity_id)
-            add(r.first_name, r.entity_id)
-            add(r.last_name, r.entity_id)
-            add(f"mr. {r.last_name}", r.entity_id)
-            add(f"ms. {r.last_name}", r.entity_id)
-        elif r.entity_type == "project":
-            add(r.name, r.entity_id)
-            add(f"project {r.name}", r.entity_id)
-        elif r.entity_type == "regulation":
-            add(r.name, r.entity_id)
-            add(r.full_name, r.entity_id)
-        else:  # product, policy
-            add(r.name, r.entity_id)
-    return pd.DataFrame(rows)
-
-
-def resolve_alias_collisions(aliases: pd.DataFrame) -> pd.DataFrame:
-    """Plain-dict last-wins per alias (SURVEY.md J1): keep the row with the
-    max insertion_idx per alias, but RETAIN the original insertion_idx so the
-    fuzzy first-max tie-break (key iteration order) stays faithful. dict key
-    order is FIRST-insertion order even after overwrite, so the tie-break
-    index is the MIN insertion_idx per alias."""
-    g = aliases.groupby("alias", sort=False)
-    out = pd.DataFrame(
-        {
-            "alias": [k for k, _ in g],
-            "entity_id": g["entity_id"].last().values,
-            "insertion_idx": g["insertion_idx"].min().values,
-        }
-    )
-    return out.sort_values("insertion_idx").reset_index(drop=True)
-
-
 def validate_corpus(corpus: dict[str, pd.DataFrame]) -> dict[str, int]:
     """Generation-time integrity checks (gen_data_str.py:579-661 analog):
     duplicate-ID detection across every catalog, manager/owner/assignment

@@ -165,6 +165,21 @@ def test_shingle_split_runs_once_outside_the_lambda(spark):
     assert lambda_violations(docs.select(inline.alias("sh"))) == ["StringSplit in a lambda over text"]
 
 
+@pytest.mark.parametrize("op", ["token_shingles", "minhash_dedup_pairs", "ngram_jaccard_pairs"])
+def test_dedup_operators_keep_splits_out_of_lambdas(spark, op):
+    """No dedup operator's optimized plan re-splits the text inside a
+    lambda. A plain explode over the lazily built shingle array infers a
+    non-empty filter that inlines the whole n-gram transform, split and
+    all, into a lambda below the scan."""
+    from plan_lint import lambda_violations
+
+    from ai_knowledge_graph_builder_spark.operators import dedup
+
+    docs = spark.createDataFrame([("1", "a b c d"), ("2", "a b c e")], "doc_id string, text string")
+    args = () if op == "token_shingles" else (0.5,)
+    assert lambda_violations(getattr(dedup, op)(docs, "doc_id", "text", *args)) == []
+
+
 def test_ivf_fixed_codebook_assignment_is_projection_only(spark):
     """The r5 IVF rewrite: with a fixed codebook, the item→cell assignment
     must be a pure projection (literal-array dot argmax inside codegen) —
@@ -245,9 +260,9 @@ def test_media_verbs_shuffle_free_and_blob_never_shuffled(spark):
 
 
 def test_dedup_release_unpersists_shingles(spark):
-    """dedup.release(result) must unpersist the shingle relation the
-    operator cached for its own multi-consumption (ADVICE r5 #4) — the
-    session's cached-relation count returns to its prior level."""
+    """The near-dup operators cache nothing: the session's persisted-RDD
+    count is unchanged after materializing a result, and after
+    ``dedup.release`` (which callers still call) as well."""
     from pyspark.sql import functions as F
 
     from ai_knowledge_graph_builder_spark.operators import dedup
@@ -260,8 +275,8 @@ def test_dedup_release_unpersists_shingles(spark):
         .select(F.col("doc_id").cast("string").alias("doc_id"), "text")
     )
     pairs = dedup.minhash_dedup_pairs(docs, "doc_id", "text", tau=0.5)
-    pairs.count()  # materialize (populates the persisted shingles)
-    assert jsc.getPersistentRDDs().size() > before
+    pairs.count()
+    assert jsc.getPersistentRDDs().size() == before
     dedup.release(pairs)
     assert jsc.getPersistentRDDs().size() == before
 

@@ -180,3 +180,31 @@ def test_ngram_jaccard_pairs_equal_python_set_jaccard(spark, n):
         lsh = {(r["a"], r["b"]): r["jaccard"] for r in mh.collect()}
         dedup.release(mh)
         assert lsh and all(want[k] == v for k, v in lsh.items())
+
+
+def test_minhash_reports_a_pair_once_however_many_bands_it_shares(spark):
+    """Exact copies share every band, so each pair meets once per band in
+    the band join; it must be reported exactly once."""
+    text = "the quick brown fox jumps over the lazy dog"
+    docs = spark.createDataFrame(
+        [("1", text), ("2", text), ("3", text), ("4", "hello world")], "doc_id string, text string"
+    )
+    pairs = dedup.minhash_dedup_pairs(docs, "doc_id", "text", tau=0.5)
+    assert pairs.count() == pairs.distinct().count() == 3
+    assert sorted((r["a"], r["b"], r["jaccard"]) for r in pairs.collect()) == [
+        ("1", "2", 1.0), ("1", "3", 1.0), ("2", "3", 1.0)
+    ]
+
+
+@pytest.mark.parametrize("op", ["minhash_dedup_pairs", "ngram_jaccard_pairs"])
+def test_near_dup_join_sides_read_one_exchange(spark, op):
+    """Both sides of the near-dup self-join read one shuffle, and nothing
+    is cached: the final adaptive plan reuses the exchange and scans no
+    in-memory relation."""
+    docs = spark.createDataFrame(HAND_DOCS, "doc_id string, text string")
+    pairs = getattr(dedup, op)(docs, "doc_id", "text", tau=0.3)
+    pairs.collect()
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
+    assert "ReusedExchange" in plan, plan
+    assert "InMemoryTableScan" not in plan, plan
