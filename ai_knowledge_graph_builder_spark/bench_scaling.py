@@ -44,15 +44,12 @@ def slice_kg_run(spark, sf_dir: str, replicas: int, out_dir: str) -> None:
     from .functions.html import render_html
     from .operators.linking import build_alias_table, resolve_mentions
     from .operators.mentions import extract_and_detect
+    from .operators.skew import spread
 
-    # the base parquet is one input split: repartition BEFORE the explode so
-    # page synthesis runs on every core
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(replicas - 1))))
-    )
+    # spread BEFORE the explode so page synthesis runs on every core
+    docs = spread(
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    ).withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(replicas - 1))))
 
     # only (url, html) cross into the extraction worker: the oracle text
     # columns would double the per-doc Arrow traffic for nothing
@@ -63,7 +60,7 @@ def slice_kg_run(spark, sf_dir: str, replicas: int, out_dir: str) -> None:
             yield pd.DataFrame({"url": urls, "html": htmls})
 
     pages = docs.mapInPandas(_mk, "url string, html binary")
-    # presalted: the explode above already spread the pages evenly
+    # presalted: the docs were spread before the explode
     mentions_raw = extract_and_detect(pages, flagship_gazetteer(), presalted=True)
     # the mention columns linking needs; the write keeps what co-occurrence reads
     mentions_raw = mentions_raw.select("url", "mention_idx", "text", "label")

@@ -22,7 +22,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from .cache import hold, release
+from .cache import hold, local_checkpoint, release
 from .functions.chunking import chunk_text
 from .functions.html import render_html
 from .operators.graph import (
@@ -35,6 +35,7 @@ from .operators.graph import (
     shadow_entities,
 )
 from .operators.linking import build_alias_table, resolve_mentions
+from .operators.skew import spread
 from .plans.pipeline import _empty_edges
 
 
@@ -48,64 +49,6 @@ def round4_frac(p, q):
     den = F.lit(2) * q
     return ((num - num % den) / den).cast("long") / F.lit(10000.0)
 
-
-def _spread(df: DataFrame, numPartitions: int | None = None,
-            *salt_cols, force: bool = False) -> DataFrame:
-    """Round-robin (or salted, when ``salt_cols`` given) repartition of a
-    narrow projection — APPLIED ONLY when the scan actually under-supplies
-    parallelism (the test parquet is one tiny file → one split; a real
-    corpus scan has thousands of splits and must NOT pay a payload
-    shuffle for a spread it already has). The gate implements the
-    'no-op to remove at scale' notes as code instead of a manual edit.
-
-    ``force=True`` bypasses the gate — required when a selective filter
-    sits below (many splits, but the surviving rows cluster in a few), so
-    the raw split count overstates real parallelism. Scope note: call
-    only on scan-rooted plans — the partition-count probe converts to an
-    RDD, which under AQE would finalize (i.e. RUN) any upstream exchange
-    stages; every call site here is scan+filter+project only."""
-    sc = df.sparkSession.sparkContext
-    n = numPartitions or sc.defaultParallelism
-    if not force and df.rdd.getNumPartitions() >= n:
-        return df
-    if salt_cols:
-        return df.repartition(n, F.pmod(F.xxhash64(*salt_cols), F.lit(n)))
-    return df.repartition(n)
-
-
-_SESSION_TMPDIRS: list[str] = []
-
-
-def _session_tmpdir(prefix: str, keep_last: int = 4) -> str:
-    """A temp dir that outlives the query function but not the process:
-    queries that return a DataFrame lazily reading their own scratch sink
-    (e.g. the streaming sessionizer) must not rmtree in ``finally`` — the
-    r6 workaround was collecting every result row to the driver, which is
-    unbounded memory at corpus scale (guide §5). Accumulation is bounded:
-    only the newest ``keep_last`` dirs per prefix are kept, and everything
-    is reaped again at interpreter exit. CONTRACT: consume (or cache) a
-    returned DataFrame before invoking the same query ``keep_last`` more
-    times — the reaper assumes superseded results were already consumed,
-    which bench/driver/tests all satisfy (each materializes the result
-    before the next call)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=prefix)
-    if not _SESSION_TMPDIRS:
-        atexit.register(
-            lambda: [shutil.rmtree(p, ignore_errors=True) for p in _SESSION_TMPDIRS]
-        )
-    _SESSION_TMPDIRS.append(d)
-    import os as _os
-
-    same = [p for p in _SESSION_TMPDIRS
-            if _os.path.basename(p).startswith(prefix)]
-    for stale in same[:-keep_last]:
-        shutil.rmtree(stale, ignore_errors=True)
-        _SESSION_TMPDIRS.remove(stale)
-    return d
 
 # ---------------------------------------------------------------------------
 # Flagship: KG construction over the driver's `documents` table
@@ -154,28 +97,21 @@ def flagship_gazetteer() -> list[tuple[str, str]]:
 
 
 def load_pages(
-    spark: SparkSession, sf_dir: str, salted: bool = False,
-    limit_doc_id: int | None = None,
+    spark: SparkSession, sf_dir: str, limit_doc_id: int | None = None,
 ) -> DataFrame:
     """documents.parquet → pages(url, warc_ts, html, text, lang): the
     Common-Crawl-shaped input table, synthesized deterministically.
 
-    ``salted=True`` applies the pipeline's salted repartition HERE, on the
-    narrow (doc_id, text) parquet projection, so downstream fused stages can
-    run ``presalted=True`` — the shuffle moves the small pre-render text
+    The narrow (doc_id, text, lang) parquet projection is spread on doc_id
+    HERE (``skew.spread``), before rendering, so downstream stages run
+    ``presalted=True`` — the shuffle moves the small pre-render text
     instead of the rendered html payload (the same rows, ~6× fewer bytes on
     the exchange). ``limit_doc_id`` filters BEFORE rendering so the
     predicate reaches the parquet scan."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     if limit_doc_id is not None:
         docs = docs.filter(F.col("doc_id") < limit_doc_id)
-    if salted:
-        # 1× cores, not 4×, and gated on the scan's real parallelism —
-        # see flagship_mentions_raw (r7 measurement) and _spread. When a
-        # limit filter is present the survivors cluster in a few splits
-        # while the raw split count looks healthy, so the gate must not
-        # apply (self-review r7).
-        docs = _spread(docs, None, "doc_id", force=limit_doc_id is not None)
+    docs = spread(docs.select("doc_id", "text", "lang"), "doc_id")
 
     def _mk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -185,7 +121,7 @@ def load_pages(
                 {"url": urls, "html": htmls, "text": pdf["text"], "lang": pdf["lang"]}
             )
 
-    pages = docs.select("doc_id", "text", "lang").mapInPandas(
+    pages = docs.mapInPandas(
         _mk, "url string, html binary, text string, lang string"
     )
     return pages.withColumn("warc_ts", F.to_timestamp(F.lit("2025-01-01 00:00:00")))
@@ -195,7 +131,7 @@ def flagship_mentions_raw(
     spark: SparkSession, sf_dir: str, gazetteer: list[tuple[str, str]] | None = None
 ) -> DataFrame:
     """documents → mentions_raw through the FULLY FUSED
-    synthesize_extract_and_detect operator: salt on the narrow parquet
+    synthesize_extract_and_detect operator: spread the narrow parquet
     projection, then page synthesis + extraction + NER in ONE Arrow pass
     (operators/mentions.py). Identical output to load_pages →
     extract_and_detect (pytest asserts set equality); the rendered html
@@ -206,16 +142,7 @@ def flagship_mentions_raw(
     from .operators.mentions import synthesize_extract_and_detect
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # ONE salt partition per core (r7): the historical 4× multiplier cost a
-    # measured extra second at sf1.0 (4.30 s vs 3.32 s min-of-4) and ~1 s
-    # at sf0.1 — with the fully fused single Arrow pass, per-task fixed
-    # costs (Arrow round trip + scheduling) dominate any balance benefit
-    # from finer salting on this uniform corpus. Skewed real corpora can
-    # still raise it at the operator (extract_and_detect keeps 4×).
-    docs = _spread(docs.select("doc_id", "text"), None, "doc_id")
-    return synthesize_extract_and_detect(
-        docs, gazetteer or flagship_gazetteer(), presalted=True
-    )
+    return synthesize_extract_and_detect(docs, gazetteer or flagship_gazetteer())
 
 
 def flagship_mentions(
@@ -387,13 +314,13 @@ def kg_orphan_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.edges_full import document_nodes, mention_edges
     from .operators.graph_queries import orphan_nodes
 
-    pages = load_pages(spark, sf_dir, salted=True)
     mentions_raw = flagship_mentions_raw(spark, sf_dir)
     # Document nodes need only (url, word_count) props and the id; orphan
     # counting reads id/node_type alone, so the documents side is a narrow
-    # JVM projection of pages — no second html crossing.
-    documents = pages.select(
-        "url",
+    # JVM projection of the parquet scan (the url as kg_doc_metadata
+    # builds it) — no page is rendered for it.
+    documents = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        F.format_string("doc://%08d", "doc_id").alias("url"),
         F.lit(None).cast("string").alias("doc_type"),
         F.lit(1.0).alias("confidence"),
         F.size(F.split(F.trim("text"), r"\s+")).alias("word_count"),
@@ -1104,8 +1031,8 @@ def chunk_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     of this arithmetic with the kernel's boundaries is pinned by
     tests/test_chunks.py::test_chunk_boundaries_query_matches_kernel."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # spread the single-split test scan (gated — see _spread)
-    docs = _spread(docs.select("doc_id", "text"))
+    # spread the scan across cores (skew.spread)
+    docs = spread(docs.select("doc_id", "text"))
     # token count via the \s+ split with empties dropped — identical to
     # the kernel's Python str.split() on ASCII-whitespace corpora (this
     # one; the oracle itself splits on the same regex, so the regex form
@@ -1199,9 +1126,9 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark BigDecimal HALF_UP said 0.5983 while DuckDB's double-arithmetic
     round said 0.5982."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # spread the single-split test scan (gated — see _spread); only the
-    # cheap non-empty filter stays on the scan side
-    docs = _spread(docs.filter(F.length(F.trim("text")) > 0).select("doc_id", "text"))
+    # spread the scan across cores (skew.spread); only the cheap non-empty
+    # filter stays on the scan side
+    docs = spread(docs.filter(F.length(F.trim("text")) > 0).select("doc_id", "text"))
     # stepped projections: each alias below is referenced more than once
     # downstream, and CollapseProject refrains from inlining non-cheap
     # aliases — so trim/split/array_distinct/filter are each EVALUATED
@@ -1312,10 +1239,9 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression ids defeat the Janino cache) and lost at sf0.1 (1.15 s vs
     0.43 s) — the fold form is kept as the better shape across scales."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    # the test parquet is one tiny file → one scan split; spread the
-    # signature compute across cores (gated — see _spread; NOT part of the
-    # algorithm, which is shuffle-free).
-    docs = _spread(docs)
+    # spread the signature compute across cores (skew.spread; NOT part of
+    # the algorithm, which is shuffle-free).
+    docs = spread(docs)
     toks = F.filter(F.split(F.trim("text"), r"\s+"), lambda w: w != "")
     hashes = F.transform(toks, lambda w: F.md5(w))
     # fold tokens → 32 vote counters (±1 per md5 nibble high-bit). ONE
@@ -1816,11 +1742,11 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dataflow is value-checked end-to-end."""
     from .operators.dedup import minhash_dedup_pairs
 
-    # spread the one-split test scan before the in-row shingle/minhash
-    # projections (16 md5 passes per doc would otherwise run on one core;
-    # gated — see _spread)
+    # spread the scan (skew.spread) before the in-row shingle/minhash
+    # projections: 16 md5 passes per doc would otherwise run on as few
+    # cores as the scan has splits
     return _planted_near_dup_pairs(spark, sf_dir, lambda both: minhash_dedup_pairs(
-        _spread(both), "doc_id", "text", tau=0.5, num_hashes=16, bands=4))
+        spread(both), "doc_id", "text", tau=0.5, num_hashes=16, bands=4))
 
 
 MINHASH_PAIRS_SQL = """
@@ -2375,7 +2301,7 @@ def kg_doc_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte identity over this slice."""
     from .operators.extraction import extract_documents
 
-    pages = load_pages(spark, sf_dir, salted=True, limit_doc_id=200)
+    pages = load_pages(spark, sf_dir, limit_doc_id=200)
     d = F.col("doc_id")
     meta = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -3146,7 +3072,7 @@ def kg_label_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality)."""
     from .operators.mentions import extract_and_detect
 
-    pages = load_pages(spark, sf_dir, salted=True, limit_doc_id=150)
+    pages = load_pages(spark, sf_dir, limit_doc_id=150)
     gaz = [("hash", "ORG"), ("scan", "GPE"), ("join", "CARDINAL"), ("row", "DATE")]
     m = extract_and_detect(pages, gaz, presalted=True)
     return m.groupBy(
@@ -3567,11 +3493,10 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repartition (filters cross RoundRobin exchanges) and re-runs the
     # full regex split serially on the pre-spread side.
     docs = docs.filter(F.trim(F.col("text")).rlike(r"\S\s+\S"))
-    # spread the scan (gated: only when the scan under-supplies
-    # parallelism — the test parquet is one split; a corpus scan is not):
-    # the round-robin repartition of the narrow (doc_id, text) projection
-    # is NOT part of the algorithm (which is shuffle-free).
-    docs = _spread(docs.select("doc_id", "text"))
+    # spread the scan (skew.spread): the round-robin repartition of the
+    # narrow (doc_id, text) projection is NOT part of the algorithm (which
+    # is shuffle-free).
+    docs = spread(docs.select("doc_id", "text"))
     # trim() strips only spaces, so text bounded by tabs/newlines would
     # split into phantom '' tokens (and a whitespace-only doc would report
     # top_token_frac=1.0 for the empty token) — drop empties explicitly
@@ -3974,48 +3899,55 @@ def kg_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap->1800s semantics the already-green ``sessionize_events`` row proves.
     Three availableNow drains: (1) all real events in one file/one
     micro-batch, (2) the sentinel file advances the watermark, (3) timeout
-    processing flushes the remaining open sessions."""
+    processing flushes the remaining open sessions.
+
+    The result is a local checkpoint of the sink read, filled before the
+    scratch dir is removed; ``cache.release(result)`` frees its blocks."""
+    import datetime
+    import shutil
+    import tempfile
+
     from .streaming.sessions import stream_sessions
 
-    tmp = _session_tmpdir("kg-stream-sess-")
-    in_dir, out_dir, ck = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ck"
     sentinel_uid = 999_999_999
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id",
-        F.col("ts").cast("timestamp").alias("ts"),
-        "user_id", "event_type", "value", "props",
-    )
-    # one file -> one micro-batch: no intra-drain watermark hazard from
-    # unordered part files (the file source has no cross-file ordering)
-    ev.coalesce(1).write.parquet(in_dir)
+    tmp = tempfile.mkdtemp(prefix="kg-stream-sess-")
+    in_dir, out_dir, ck = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ck"
+    try:
+        ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+            "event_id",
+            F.col("ts").cast("timestamp").alias("ts"),
+            "user_id", "event_type", "value", "props",
+        )
+        # one file -> one micro-batch: no intra-drain watermark hazard from
+        # unordered part files (the file source has no cross-file ordering)
+        ev.coalesce(1).write.parquet(in_dir)
 
-    def _drain() -> None:
-        q = stream_sessions(spark, in_dir, out_dir, ck,
-                            gap_s=1800, watermark="2 hours")
-        q.awaitTermination(600)
-        if q.isActive:  # pragma: no cover - availableNow should stop
-            q.stop()
+        def _drain() -> None:
+            q = stream_sessions(spark, in_dir, out_dir, ck,
+                                gap_s=1800, watermark="2 hours")
+            q.awaitTermination(600)
+            if q.isActive:  # pragma: no cover - availableNow should stop
+                q.stop()
 
-    _drain()
-    import datetime
-
-    max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-    sent = spark.createDataFrame(
-        [(0, max_ts + datetime.timedelta(hours=24), sentinel_uid,
-          "sentinel", 0.0, "{}")],
-        ev.schema,
-    )
-    sent.coalesce(1).write.mode("append").parquet(in_dir)
-    _drain()  # sentinel batch: watermark jumps past every gap horizon
-    _drain()  # timeout batch: open sessions flush
-    # return the sink-read DataFrame directly — no driver collect (the
-    # r6 form collected every session row to survive a finally-rmtree;
-    # at corpus scale that collect is unbounded driver memory, guide
-    # §5). The sink lives in a session-scoped temp dir reaped at
-    # interpreter exit, after every consumer of the lazy plan is done.
-    return spark.read.parquet(out_dir).filter(
-        F.col("user_id") != sentinel_uid
-    ).select("user_id", "session_start_s", "session_end_s", "n_events")
+        _drain()
+        max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
+        sent = spark.createDataFrame(
+            [(0, max_ts + datetime.timedelta(hours=24), sentinel_uid,
+              "sentinel", 0.0, "{}")],
+            ev.schema,
+        )
+        sent.coalesce(1).write.mode("append").parquet(in_dir)
+        _drain()  # sentinel batch: watermark jumps past every gap horizon
+        _drain()  # timeout batch: open sessions flush
+        # the sink read becomes executor-side checkpoint blocks before the
+        # dir goes — no driver collect, which would grow with the data
+        out = local_checkpoint(spark.read.parquet(out_dir).filter(
+            F.col("user_id") != sentinel_uid
+        ).select("user_id", "session_start_s", "session_end_s", "n_events"))
+        out.count()
+        return hold(out, out)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 KG_STREAM_SESSIONS_SQL = """

@@ -1,11 +1,12 @@
 """S3-S5/U6: pages → documents via deterministic text extraction.
 
 Reference: per-file docx/txt/pdf extraction in a driver loop
-(neo4j_loader.py:215-241, 243-299). Here: a salted repartition by url-hash
-(uniform extraction load regardless of crawl-order clustering — north rule)
-followed by one Arrow-batched ``mapInPandas`` running the pure
-``extract_text`` kernel. Word counts use Python ``str.split()`` inside the
-UDF — exact reference semantics (SURVEY.md §7.4 risk 4).
+(neo4j_loader.py:215-241, 243-299). Here: a hash repartition on url, one
+partition per core (``skew.spread``: uniform extraction load regardless of
+crawl-order clustering — north rule), followed by one Arrow-batched
+``mapInPandas`` running the pure ``extract_text`` kernel. Word counts use
+Python ``str.split()`` inside the UDF — exact reference semantics
+(SURVEY.md §7.4 risk 4).
 
 Column pruning matters at 100 TB: the UDF receives only (url, html); document
 metadata (doc_type, confidence, contradictions) is joined afterwards from the
@@ -21,30 +22,26 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.html import extract_text
+from .skew import spread
 
 
 def extract_documents(
     pages: DataFrame,
     doc_meta: DataFrame | None = None,
-    partitions: int | None = None,
     presalted: bool = False,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → documents(url, doc_type,
     source, extracted_text, word_count, confidence, has_contradictions).
 
-    ``presalted=True`` skips the salted repartition for inputs that are
-    ALREADY uniformly distributed (e.g. the output of an upstream salted
-    stage): the repartition is a full shuffle of the html payload — the
-    single largest memory-bus cost of the extraction phase — and pure waste
-    when the input needs no rebalancing."""
+    The (url, html) input is hash-partitioned on url first, one partition
+    per core (``skew.spread``). ``presalted=True`` skips that for inputs
+    that are ALREADY spread (``driver_queries.load_pages`` spreads its
+    narrow pre-render text): the repartition is a full shuffle of the html
+    payload — the single largest memory-bus cost of the extraction phase —
+    and pure waste when the input needs no rebalancing."""
     src = pages.select("url", "html")
     if not presalted:
-        # salted repartition by url-hash (SURVEY.md §4 explicit item 1); 4x
-        # the core count so document-length variance and Python-worker
-        # scheduling jitter average out instead of convoying the stage on
-        # its slowest task
-        n = partitions or 4 * src.sparkSession.sparkContext.defaultParallelism
-        src = src.repartition(n, F.pmod(F.xxhash64("url"), F.lit(n)))
+        src = spread(src, "url")
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

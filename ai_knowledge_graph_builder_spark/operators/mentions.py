@@ -11,7 +11,10 @@ text)`` rows and yields one MENTION_SCHEMA frame per Arrow batch. The three
 public entry points are source adapters around it that differ only in what
 crosses the JVM↔Python boundary: extracted text (``detect_mentions``), page
 html (``extract_and_detect``) or the pre-render corpus text
-(``synthesize_extract_and_detect``).
+(``synthesize_extract_and_detect``). The last two hash-partition their
+narrow input on its key, one partition per core (``skew.spread``), before
+the Arrow pass; ``detect_mentions`` takes its documents as they are
+partitioned (``extract_documents`` output, or a committed stage's files).
 
 Long pages are NOT chunked before NER here because the rule detector is
 O(len); a spaCy-backed detector would wrap itself with
@@ -29,6 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.html import extract_text, render_html
 from ..functions.ner import NER_LABELS, RuleNER
+from .skew import spread
 
 MENTION_SCHEMA = (
     "url string, doc_type string, mention_idx int, text string, "
@@ -73,13 +77,6 @@ def _page_rows(pages: Iterable[tuple[str, bytes]]) -> Iterator[tuple[str, None, 
             yield url, None, text
 
 
-def _salted(src: DataFrame, key: str, presalted: bool) -> DataFrame:
-    if presalted:
-        return src
-    n = 4 * src.sparkSession.sparkContext.defaultParallelism
-    return src.repartition(n, F.pmod(F.xxhash64(key), F.lit(n)))
-
-
 def detect_mentions(
     documents: DataFrame,
     gazetteer: list[tuple[str, str]] | None = None,
@@ -112,9 +109,14 @@ def extract_and_detect(
     scaling criterion (BENCH.md control probes). Use the unfused pair when
     the documents table must materialize (checkpointed stage runs); use this
     when mentions are the only consumer (streaming micro-batches, slice
-    benchmarks, single-shot jobs)."""
+    benchmarks, single-shot jobs).
+
+    (url, html) is spread on url first; ``presalted=True`` skips that for
+    pages an upstream step already spread (``load_pages``)."""
     gaz = tuple(gazetteer) if gazetteer else None
-    src = _salted(pages.select("url", "html"), "url", presalted)
+    src = pages.select("url", "html")
+    if not presalted:
+        src = spread(src, "url")
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         return _mention_frames((_page_rows(zip(p["url"], p["html"])) for p in batches), gaz)
@@ -125,7 +127,6 @@ def extract_and_detect(
 def synthesize_extract_and_detect(
     docs: DataFrame,
     gazetteer: list[tuple[str, str]] | None = None,
-    presalted: bool = False,
 ) -> DataFrame:
     """Fused corpus synthesis + S3-S5 + U1: documents(doc_id, text) →
     mentions_raw in ONE Arrow pass.
@@ -138,10 +139,11 @@ def synthesize_extract_and_detect(
     the widest column in the pipeline — crossed Python→JVM→Python between
     them for no reason; here it is born and consumed inside one Python
     worker pass and the only boundary traffic is (doc_id, text) in and the
-    mention rows out. Use ``load_pages`` + ``extract_and_detect`` when the
+    mention rows out; the narrow (doc_id, text) projection is spread on
+    doc_id before it. Use ``load_pages`` + ``extract_and_detect`` when the
     pages relation itself must materialize."""
     gaz = tuple(gazetteer) if gazetteer else None
-    src = _salted(docs.select("doc_id", "text"), "doc_id", presalted)
+    src = spread(docs.select("doc_id", "text"), "doc_id")
 
     def _pages(pdf: pd.DataFrame) -> Iterator[tuple[str, bytes]]:
         for doc_id, text in zip(pdf["doc_id"], pdf["text"]):

@@ -95,8 +95,8 @@ def get_spark(
         # byte-size coalescing starves Arrow-UDF stages of parallelism (the
         # NER/linking relations compress to a few MB but cost CPU per row —
         # profiled: a 55 s stage ran on 27 tasks at 32 cores). Skew-join
-        # splitting stays on; partition counts come from our explicit salted
-        # repartitions instead.
+        # splitting stays on; each Python-UDF input is hash-partitioned one
+        # partition per core instead (operators/skew.spread).
         .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

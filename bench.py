@@ -119,6 +119,20 @@ def _one_window(spark, sf_dir: str) -> dict:
             "probe_s": round(max(probe0, probe1), 3)}
 
 
+def warm_up(spark, sf_dir: str, cpus: int) -> None:
+    """Warm up the JVM AND the Python/Arrow worker pool so per-query timings
+    measure the plan, not the one-time daemon forks + pandas imports
+    (long-lived on any real cluster): one tiny mapInPandas over 64 rows
+    forks the daemons; the count warms the scan path."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs.count()
+    (
+        docs.limit(64).repartition(cpus)
+        .mapInPandas(lambda it: (pdf.head(1) for pdf in it), docs.schema)
+        .write.format("noop").mode("overwrite").save()
+    )
+
+
 def run_bench() -> dict:
     from ai_knowledge_graph_builder_spark.driver_queries import QUERIES
     from ai_knowledge_graph_builder_spark.session import default_cpus, get_spark
@@ -128,18 +142,7 @@ def run_bench() -> dict:
     spark = get_spark("kg-bench", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warm up the JVM AND the Python/Arrow worker pool so per-query timings
-    # measure the plan, not the one-time daemon forks + pandas imports
-    # (long-lived on any real cluster): one tiny mapInPandas over 64 rows
-    # forks the daemons; the count warms the scan path.
-    spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .limit(64).repartition(cpus)
-        .mapInPandas(lambda it: (pdf.head(1) for pdf in it),
-                     spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .write.format("noop").mode("overwrite").save()
-    )
+    warm_up(spark, sf_dir, cpus)
 
     # cross-window retry: repeat the full min-of-3 pass in up to
     # MAX_WINDOWS time windows separated by WINDOW_GAP_S; a whole-window

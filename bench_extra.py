@@ -15,6 +15,7 @@ JSON line.
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
 import json
@@ -25,42 +26,42 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from bench import HEADLINE, _spin_probe
+from bench import HEADLINE, _spin_probe, warm_up
+
+
+def _parse_args() -> argparse.Namespace:
+    """The command line, checked before any Spark session starts: an
+    unknown flag or query name exits here with status 2."""
+    from ai_knowledge_graph_builder_spark.driver_queries import QUERIES
+
+    p = argparse.ArgumentParser(description="Min-of-N noop-sink timings of driver queries.")
+    p.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
+                   help="directory of the parquet tables (default: $SPARK_GRAFT_SF_DIR or sf0.1)")
+    p.add_argument("--tries", type=int, default=2, help="timed tries per query; the minimum is kept")
+    p.add_argument("--explain-tag", help="also write plans/r07/<query>_<TAG>.txt")
+    p.add_argument("--queries", default=",".join(HEADLINE),
+                   help="comma-separated driver query names (default: the bench.py headline set)")
+    args = p.parse_args()
+    args.queries = args.queries.split(",")
+    unknown = [n for n in args.queries if n not in QUERIES]
+    if unknown:
+        p.error(f"unknown queries: {', '.join(unknown)}")
+    args.tries = max(1, args.tries)
+    return args
 
 
 def main() -> None:
+    args = _parse_args()
     from ai_knowledge_graph_builder_spark.bench_scaling import _steal_snapshot
     from ai_knowledge_graph_builder_spark.driver_queries import QUERIES
     from ai_knowledge_graph_builder_spark.session import default_cpus, get_spark
 
-    args = sys.argv[1:]
-
-    def _opt(flag: str, default: str | None = None) -> str | None:
-        if flag in args:
-            i = args.index(flag) + 1
-            if i >= len(args):
-                sys.exit(f"{flag} requires a value")
-            return args[i]
-        return default
-
-    sf_dir = _opt("--sf-dir", os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    tries = max(1, int(_opt("--tries", "2")))
-    tag = _opt("--explain-tag")
-    names = (_opt("--queries") or ",".join(HEADLINE)).split(",")
+    sf_dir, tries, tag, names = args.sf_dir, args.tries, args.explain_tag, args.queries
 
     cpus = default_cpus()
     spark = get_spark("kg-bench-extra", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # same warmup as bench.py: scan path + Python/Arrow worker pool
-    spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .limit(64).repartition(cpus)
-        .mapInPandas(lambda it: (pdf.head(1) for pdf in it),
-                     spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .write.format("noop").mode("overwrite").save()
-    )
+    warm_up(spark, sf_dir, cpus)
 
     plans_dir = Path(__file__).resolve().parent / "plans" / "r07"
     timings: dict[str, float] = {}

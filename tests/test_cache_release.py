@@ -4,10 +4,15 @@ the session's persisted-RDD count no higher than before it started."""
 
 from __future__ import annotations
 
+import glob
+import os
+import tempfile
+
+import duckdb
 import pytest
 
 from ai_knowledge_graph_builder_spark.cache import release
-from ai_knowledge_graph_builder_spark.driver_queries import QUERIES, kg_inferred_triples
+from ai_knowledge_graph_builder_spark.driver_queries import ORACLES, QUERIES, kg_inferred_triples
 from ai_knowledge_graph_builder_spark.plans.pipeline import (
     run_kg_pipeline,
     run_kg_pipeline_checkpointed,
@@ -78,4 +83,24 @@ def test_driver_query_release(spark, name):
     result = QUERIES[name](spark, SF_DIR)
     assert result.count() > 0
     release(result)
+    assert _persisted(spark) <= before
+
+
+def test_stream_sessions_result_outlives_later_calls(spark):
+    """kg_stream_sessions removes its scratch dir before it returns; its
+    result lives in checkpoint blocks, so later calls cannot take it away,
+    and ``release`` frees them."""
+    def scratch():
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "kg-stream-sess-*")))
+
+    dirs_before, before = scratch(), _persisted(spark)
+    first = QUERIES["kg_stream_sessions"](spark, SF_DIR)
+    later = [QUERIES["kg_stream_sessions"](spark, SF_DIR) for _ in range(5)]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF_DIR}/events.parquet'")
+    want = sorted(con.execute(ORACLES["kg_stream_sessions"]).fetchall())
+    assert sorted(tuple(r) for r in first.collect()) == want
+    assert scratch() <= dirs_before
+    for result in (first, *later):
+        release(result)
     assert _persisted(spark) <= before

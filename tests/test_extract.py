@@ -94,7 +94,7 @@ def test_synthesized_fused_matches_load_pages_chain(spark):
 
     sf_dir = "/root/testdata/sf0.001"
     gaz = flagship_gazetteer()
-    pages = load_pages(spark, sf_dir, salted=True)
+    pages = load_pages(spark, sf_dir)
     cols = ["url", "doc_type", "mention_idx", "text", "label", "start", "end"]
     want = {tuple(r[c] for c in cols)
             for r in extract_and_detect(pages, gaz, presalted=True).collect()}

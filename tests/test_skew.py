@@ -1,11 +1,17 @@
-"""Salted equi-join: exact equivalence to the plain join under heavy skew."""
+"""Salted equi-join: exact equivalence to the plain join under heavy skew.
+``spread``: every Python-UDF input it partitions fills one partition per
+core."""
 
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
+from ai_knowledge_graph_builder_spark.driver_queries import load_pages
+from ai_knowledge_graph_builder_spark.operators.extraction import extract_documents
 from ai_knowledge_graph_builder_spark.operators.skew import salted_equi_join, top_heavy_keys
+from ai_knowledge_graph_builder_spark.sources.corpus import generate_corpus
 
 
 def test_salted_join_equivalence(spark):
@@ -33,3 +39,21 @@ def test_salted_join_equivalence(spark):
 
     hot = top_heavy_keys(large, "k", threshold=1000).collect()
     assert len(hot) == 1 and hot[0]["k"] == "hot"
+
+
+def _corpus_documents(spark):
+    """The 74-page corpus of the checkpointed benchmark, extracted."""
+    corpus = generate_corpus(seed=201, waves=5, n_emails=10, n_external=4)
+    return extract_documents(spark.createDataFrame(corpus["pages"]))
+
+
+@pytest.mark.parametrize("build", [
+    _corpus_documents,
+    lambda spark: load_pages(spark, "/root/testdata/sf0.001"),
+], ids=["extract_documents", "load_pages"])
+def test_spread_fills_one_partition_per_core(spark, build):
+    """Hashing the key itself into n partitions leaves none empty on these
+    inputs; hashing ``pmod(xxhash64(key), n)`` (n values) again collided
+    and left about a third of them empty."""
+    sizes = build(spark).rdd.glom().map(len).collect()
+    assert len(sizes) == spark.sparkContext.defaultParallelism and min(sizes) > 0, sizes
